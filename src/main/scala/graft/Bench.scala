@@ -113,9 +113,8 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] bucketed setup failed: ${e.getMessage}")
     }
-    val appId = spark.sparkContext.applicationId
-    val zPath = s"/root/repo/target/tmp/bench_zorder_$appId"
-    val uPath = s"/root/repo/target/tmp/bench_unclustered_$appId"
+    val zPath = Scratch.path(spark, "bench_zorder", sfDir)
+    val uPath = Scratch.path(spark, "bench_unclustered", sfDir)
     try {
       queries.RelationalQueries.q57WriteLayout(spark, sfDir, zPath)
       queries.RelationalQueries.q57WriteUnclustered(spark, sfDir, uPath)

@@ -31,14 +31,4 @@ object FixtureCache {
       cache.getOrElseUpdate(
         s.sparkContext.applicationId + "|" + key, build).asInstanceOf[T]
     }
-
-  /** Short stable fingerprint of a table dir, for embedding in the
-    * ON-DISK scratch path of a dir-keyed fixture. The cache key alone
-    * is not enough: a build for dir B at the same path would silently
-    * replace dir A's store while A's cache entry still points there —
-    * the path must vary with every input the cache key varies with. */
-  def dirTag(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
 }

@@ -99,8 +99,6 @@ object Tables {
       // serves clone one per query — for zero benefit here (~0.3 s per
       // live-serve call, measured on q193)
       .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "200"))
 
   /** Register every table as a temp view so `spark.sql` surfaces work too. */
   def registerAll(spark: SparkSession, dir: String): Unit =

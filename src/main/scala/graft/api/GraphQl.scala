@@ -3884,10 +3884,7 @@ object GraphQl {
     * the shared setup of every mutation round-trip query. */
   private def freshStore(s: org.apache.spark.sql.SparkSession,
       dir: String, tag: String): String = {
-    // dirTag: the cache key varies with dir, so the path must too —
-    // else a second dir's build would squat the first dir's cached path
-    val path = s"/root/repo/target/tmp/${tag}_store_" +
-      s"${s.sparkContext.applicationId}_${graft.FixtureCache.dirTag(dir)}"
+    val path = graft.Scratch.path(s, s"${tag}_store", dir)
     val base = graft.Tables.load(s, dir, "customer")
       .select("c_custkey", "c_mktsegment", "c_acctbal")
     graft.sources.SnapshotStore.write(base, path)
@@ -4032,10 +4029,8 @@ object GraphQl {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     val (cPath, oPath) = graft.FixtureCache.once(s, s"q131|$dir") {
-      val app = s.sparkContext.applicationId +
-        "_" + graft.FixtureCache.dirTag(dir)
-      val cP = s"/root/repo/target/tmp/q131c_store_$app"
-      val oP = s"/root/repo/target/tmp/q131o_store_$app"
+      val cP = graft.Scratch.path(s, "q131c_store", dir)
+      val oP = graft.Scratch.path(s, "q131o_store", dir)
       graft.sources.SnapshotStore.write(
         graft.Tables.load(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), cP)
@@ -4095,10 +4090,8 @@ object GraphQl {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     val (cPath, oPath) = graft.FixtureCache.once(s, s"q146|$dir") {
-      val app = s.sparkContext.applicationId +
-        "_" + graft.FixtureCache.dirTag(dir)
-      val cP = s"/root/repo/target/tmp/q146c_store_$app"
-      val oP = s"/root/repo/target/tmp/q146o_store_$app"
+      val cP = graft.Scratch.path(s, "q146c_store", dir)
+      val oP = graft.Scratch.path(s, "q146o_store", dir)
       graft.sources.SnapshotStore.write(
         graft.Tables.load(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), cP)
@@ -4167,10 +4160,8 @@ object GraphQl {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     val (cPath, oPath) = graft.FixtureCache.once(s, s"q160|$dir") {
-      val app = s.sparkContext.applicationId +
-        "_" + graft.FixtureCache.dirTag(dir)
-      val cP = s"/root/repo/target/tmp/q160c_store_$app"
-      val oP = s"/root/repo/target/tmp/q160o_store_$app"
+      val cP = graft.Scratch.path(s, "q160c_store", dir)
+      val oP = graft.Scratch.path(s, "q160o_store", dir)
       graft.sources.SnapshotStore.write(
         graft.Tables.load(s, dir, "customer")
           .select("c_custkey", "c_mktsegment"), cP)
@@ -5826,11 +5817,9 @@ object GraphQl {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     val (cPath, oPath) = graft.FixtureCache.once(s, s"q213|$dir") {
-      val app = s.sparkContext.applicationId +
-        "_" + graft.FixtureCache.dirTag(dir)
-      val nP = s"/root/repo/target/tmp/q213n_store_$app"
-      val cP = s"/root/repo/target/tmp/q213c_store_$app"
-      val oP = s"/root/repo/target/tmp/q213o_store_$app"
+      val nP = graft.Scratch.path(s, "q213n_store", dir)
+      val cP = graft.Scratch.path(s, "q213c_store", dir)
+      val oP = graft.Scratch.path(s, "q213o_store", dir)
       graft.sources.SnapshotStore.write(
         graft.Tables.load(s, dir, "nation"), nP)
       graft.sources.SnapshotStore.write(
@@ -5905,10 +5894,8 @@ object GraphQl {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     val (cPath, oPath) = graft.FixtureCache.once(s, s"q219|$dir") {
-      val app = s.sparkContext.applicationId +
-        "_" + graft.FixtureCache.dirTag(dir)
-      val cP = s"/root/repo/target/tmp/q219c_store_$app"
-      val oP = s"/root/repo/target/tmp/q219o_store_$app"
+      val cP = graft.Scratch.path(s, "q219c_store", dir)
+      val oP = graft.Scratch.path(s, "q219o_store", dir)
       graft.sources.SnapshotStore.write(
         graft.Tables.load(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), cP)
@@ -5976,9 +5963,7 @@ object GraphQl {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     val path = graft.FixtureCache.once(s, s"q214|$dir") {
-      val app = s.sparkContext.applicationId +
-        "_" + graft.FixtureCache.dirTag(dir)
-      val p = s"/root/repo/target/tmp/q214_store_$app"
+      val p = graft.Scratch.path(s, "q214_store", dir)
       graft.sources.SnapshotStore.write(
         graft.Tables.load(s, dir, "events")
           .filter(col("event_id") <= 50L)
@@ -6374,9 +6359,7 @@ object GraphQl {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     val path = graft.FixtureCache.once(s, s"q222|$dir") {
-      val app = s.sparkContext.applicationId +
-        "_" + graft.FixtureCache.dirTag(dir)
-      val p = s"/root/repo/target/tmp/q222_store_$app"
+      val p = graft.Scratch.path(s, "q222_store", dir)
       // the q131 slice discipline: a bounded rollup store, unique on
       // the composite key by construction (sums of integral-valued
       // quantities — exact, engine-order-free). Three SEED rows in

@@ -578,8 +578,7 @@ object Permissions {
   def q171RoleScopedMutation(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    val path = s"/root/repo/target/tmp/q171_store_" +
-      s.sparkContext.applicationId
+    val path = graft.Scratch.path(s, "q171_store", dir)
     graft.sources.SnapshotStore.write(
       graft.Tables.load(s, dir, "customer")
         .select("c_custkey", "c_mktsegment", "c_acctbal"), path)

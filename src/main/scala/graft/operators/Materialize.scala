@@ -14,24 +14,12 @@ import org.apache.spark.storage.StorageLevel
   * Why not bare `.cache()`: at 100 TB a memory-evicted block silently
   * recomputes the entire upstream fan-out per consumer — the failure mode is
   * invisible locally and catastrophic at scale. Policy here:
-  *
-  *  - default `persist(MEMORY_AND_DISK)` — evicted blocks SPILL, never
-  *    recompute (this is also Dataset.cache()'s level, but stated, not
-  *    implied);
-  *  - `spark.graft.materialize=checkpoint` switches to a (lazy)
-  *    `localCheckpoint` — lineage is truncated and blocks land in
-  *    executor-local storage on first materialization, the right call when
-  *    the plan itself is the problem (iterative growth, analysis cost) or
-  *    when blocks should be GC-reclaimable: checkpointed RDD blocks are
-  *    dropped by the ContextCleaner once unreferenced, while persisted
-  *    plans stay registered in the CacheManager until unpersist.
+  * `persist(MEMORY_AND_DISK)` — evicted blocks SPILL, never recompute
+  * (this is also Dataset.cache()'s level, but stated, not implied).
   */
 object Materialize {
 
   /** Pin a frame consumed more than once downstream. */
   def pin[T](ds: Dataset[T]): Dataset[T] =
-    ds.sparkSession.conf.getOption("spark.graft.materialize") match {
-      case Some("checkpoint") => ds.localCheckpoint(eager = false)
-      case _ => ds.persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    ds.persist(StorageLevel.MEMORY_AND_DISK)
 }

@@ -35,8 +35,7 @@ object BucketedQueries {
   def ensureTables(s: SparkSession, dir: String): Unit = synchronized {
     if (loadedDir == dir && s.catalog.tableExists(tableName("customer")))
       return
-    val base =
-      s"/root/repo/target/tmp/bucketed_${s.sparkContext.applicationId}"
+    val base = graft.Scratch.path(s, "bucketed", dir)
     Seq(("customer", "c_custkey"), ("orders", "o_custkey"),
       ("lineitem", "l_orderkey")).foreach { case (t, key) =>
       s.sql(s"DROP TABLE IF EXISTS ${tableName(t)}")

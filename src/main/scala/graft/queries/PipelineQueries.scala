@@ -661,8 +661,7 @@ object PipelineQueries {
     // store built once per process (FixtureCache serving contract);
     // every call probes the warm store by band key
     val path = graft.FixtureCache.once(s, "q170") {
-      val p = s"/root/repo/target/tmp/q170_store_" +
-        s.sparkContext.applicationId
+      val p = graft.Scratch.path(s, "q170_store", dir)
       I.initStore(M.imageDHashes(dhashFixtureBytes.toDF("key", "bytes")),
         p)
       p
@@ -838,8 +837,7 @@ object PipelineQueries {
     import s.implicits._
     import graft.operators.{IncrementalImageDedup => I, MultimodalOps => M}
     val path = graft.FixtureCache.once(s, "q176") {
-      val p = s"/root/repo/target/tmp/q176_store_" +
-        s.sparkContext.applicationId
+      val p = graft.Scratch.path(s, "q176_store", dir)
       I.initStore(M.audioDHashes(audioFixtureBytes.toDF("key", "bytes"))
         .withColumnRenamed("ahash", "dhash"), p)
       p
@@ -858,8 +856,7 @@ object PipelineQueries {
     import s.implicits._
     import graft.operators.{IncrementalImageDedup => I, MultimodalOps => M}
     val path = graft.FixtureCache.once(s, "q182") {
-      val p = s"/root/repo/target/tmp/q182_store_" +
-        s.sparkContext.applicationId
+      val p = graft.Scratch.path(s, "q182_store", dir)
       I.initStorePartitioned(
         M.imageDHashes(dhashFixtureBytes.toDF("key", "bytes")), p)
       p
@@ -1098,9 +1095,7 @@ object PipelineQueries {
     import s.implicits._
     import graft.operators.{MultimodalOps => M}
     val path = graft.FixtureCache.once(s, s"q233|$dir") {
-      val p = s"/root/repo/target/tmp/q233_store_" +
-        s.sparkContext.applicationId +
-        "_" + graft.FixtureCache.dirTag(dir)
+      val p = graft.Scratch.path(s, "q233_store", dir)
       val imedia = retentionFixtureBytes.toDF("key", "bytes")
         .localCheckpoint(true) // decoded twice: hashes + pixel counts
       val ihs = M.imageDHashes(imedia).filter(col("dhash").isNotNull)

@@ -524,8 +524,7 @@ object RelationalQueries {
     * not a scan benchmark. [[q57ScanRaw]] runs the same predicate on the
     * unclustered table as the comparison bar. */
   def q57ZorderScan(s: SparkSession, dir: String): DataFrame = {
-    val path =
-      s"/root/repo/target/tmp/q57_zorder_${s.sparkContext.applicationId}"
+    val path = graft.Scratch.path(s, "q57_zorder", dir)
     q57WriteLayout(s, dir, path)
     q57Scan(s, path)
   }
@@ -565,9 +564,7 @@ object RelationalQueries {
   /** Q24 — snapshot write→read round-trip (reference Postgres sink S4).
     * Writes Q2's fold result as a parquet snapshot, re-reads, aggregates. */
   def q24Snapshot(s: SparkSession, dir: String): DataFrame = {
-    // applicationId-scoped so concurrent sessions never clobber each other
-    val path =
-      s"/root/repo/target/tmp/q24_snapshot_${s.sparkContext.applicationId}"
+    val path = graft.Scratch.path(s, "q24_snapshot", dir)
     q2LatestState(s, dir).write.mode("overwrite").parquet(path)
     s.read.parquet(path)
       .agg(count(lit(1)).as("n"),
@@ -695,8 +692,7 @@ object RelationalQueries {
     // process (FixtureCache serving contract); every call reads the
     // refreshed view — the steady state an incremental view serves
     val root = graft.FixtureCache.once(s, s"q152|$dir") {
-      val r = s"/root/repo/target/tmp/q152_view_" +
-        s"${s.sparkContext.applicationId}_${graft.FixtureCache.dirTag(dir)}"
+      val r = graft.Scratch.path(s, "q152_view", dir)
       IncrementalAgg.initStore(s, r,
         orders.filter(col("o_orderkey") <= 200000L), spec)
       def slice(lo: Long, hi: Long) =

@@ -285,9 +285,7 @@ object SimilarityQueries {
   def q236IvfForget(s: SparkSession, dir: String): DataFrame = {
     import graft.similarity.IvfIndex
     val path = graft.FixtureCache.once(s, s"q236|$dir") {
-      val p = s"/root/repo/target/tmp/q236_ivf_" +
-        s.sparkContext.applicationId + "_" +
-        graft.FixtureCache.dirTag(dir)
+      val p = graft.Scratch.path(s, "q236_ivf", dir)
       val e = Tables.load(s, dir, "embeddings")
         .select("vec_id", "embedding")
       IvfIndex.build(e, p, nCells = 16)
@@ -469,7 +467,7 @@ object SimilarityQueries {
       .orderBy("vec_id")
   }
 
-  // one PQ index build per (JVM, path): a deployment builds the index
+  // one PQ index build per (application, dir): a deployment builds the index
   // offline and probes it many times — re-timing the build on every probe
   // would repeat q57's write/read double-count mistake
   private val pqBuilt = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
@@ -545,8 +543,7 @@ object SimilarityQueries {
     * carries the recall/storage/append contracts. */
   def q79AnnPq(s: SparkSession, dir: String, queryId: Long = 1,
       nProbe: Int = 4, k: Int = 5): DataFrame = {
-    val path = "/root/repo/target/tmp/pq_index_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_")
+    val path = graft.Scratch.path(s, "pq_index", dir)
     pqBuilt.computeIfAbsent(path, _ => {
       IvfIndex.buildPq(Tables.load(s, dir, "embeddings"), path, nCells = 16)
       true

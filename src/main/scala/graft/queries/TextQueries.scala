@@ -1499,8 +1499,9 @@ object TextQueries {
       .orderBy("doc_id")
   }
 
-  // one inverted-index build per (JVM, dir) — a deployment builds the
-  // index offline and probes it many times (same policy as q79's PQ index)
+  // one inverted-index build per (application, dir) — a deployment
+  // builds the index offline and probes it many times (same policy as
+  // q79's PQ index)
   private val invBuilt =
     new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
 
@@ -1518,14 +1519,10 @@ object TextQueries {
       qTerms: Seq[String] = Seq("join", "hash", "window")): DataFrame =
     graft.search.InvertedIndex.search(s, sharedIndex(s, dir), qTerms, k)
 
-  /** The per-JVM shared index q82/q89 probe (built once per dir). The
-    * index root derives from the `graft.index.dir` session conf,
-    * falling back to the JVM temp dir — never a hardcoded repo path. */
+  /** The shared index q82/q89 probe (built once per application and
+    * dir). */
   private def sharedIndex(s: SparkSession, dir: String): String = {
-    val root = s.conf.get("graft.index.dir",
-      sys.props.getOrElse("java.io.tmpdir", "/tmp")).stripSuffix("/")
-    val path = s"$root/graft_inv_index_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_")
+    val path = graft.Scratch.path(s, "graft_inv_index", dir)
     invBuilt.computeIfAbsent(path, _ => {
       graft.search.InvertedIndex.build(docs(s, dir), path)
       true
@@ -1912,7 +1909,7 @@ object TextQueries {
   def q189ExportManifest(s: SparkSession, dir: String): DataFrame =
     graft.operators.CorpusExport.exportShards(
       docs(s, dir).select("doc_id", "text"),
-      s"/root/repo/target/tmp/q189_" + s.sparkContext.applicationId)
+      graft.Scratch.path(s, "q189", dir))
 
   /** Q190 — RIGHT-TO-BE-FORGOTTEN in the derived index (the q160
     * cascade-forget discipline carried into the dedup store family):
@@ -1934,9 +1931,7 @@ object TextQueries {
     forgetFx match {
       case Some((k, v)) if k == key => v
       case _ =>
-        val base = s"/root/repo/target/tmp/q190x_" +
-          s.sparkContext.applicationId +
-          "_" + graft.FixtureCache.dirTag(dir)
+        val base = graft.Scratch.path(s, "q190x", dir)
         val corpus = docs(s, dir).select("doc_id", "text")
           .orderBy("doc_id").limit(300)
           .localCheckpoint(true)
@@ -2045,9 +2040,7 @@ object TextQueries {
   def q186SimhashStoreSearch(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{IncrementalImageDedup => I}
     val (path, q) = graft.FixtureCache.once(s, s"q186|$dir") {
-      val p = s"/root/repo/target/tmp/q186_" +
-        s.sparkContext.applicationId +
-        "_" + graft.FixtureCache.dirTag(dir)
+      val p = graft.Scratch.path(s, "q186", dir)
       val hashes = docs(s, dir)
         .select(col("doc_id").cast("string").as("key"),
           graft.functions.TextKernelExpressions
@@ -2081,9 +2074,7 @@ object TextQueries {
     // the two kernel stores build once per process; every call runs
     // the AGREEMENT probe (the operator under measure) against them
     val (base, d) = graft.FixtureCache.once(s, s"q187|$dir") {
-      val b = s"/root/repo/target/tmp/q187_" +
-        s.sparkContext.applicationId +
-        "_" + graft.FixtureCache.dirTag(dir)
+      val b = graft.Scratch.path(s, "q187", dir)
       val dd = docs(s, dir).select("doc_id", "text")
         .filter(col("doc_id") < 300).localCheckpoint(true)
       val old = dd.filter(col("doc_id") < 150)
@@ -2131,9 +2122,7 @@ object TextQueries {
     // contract); every call is the probe against the warm store
     val (servingPath, qText) =
       graft.FixtureCache.once(s, s"q185|$dir") {
-        val base = s"/root/repo/target/tmp/q185_" +
-          s.sparkContext.applicationId +
-          "_" + graft.FixtureCache.dirTag(dir)
+        val base = graft.Scratch.path(s, "q185", dir)
         // 300 docs: doc 45's est-1.0 partner 267 is in range, and the
         // md5 kernel (8 seeded hashes per shingle, the
         // oracle-replayable path) prices the fixture build — the bench
@@ -2453,9 +2442,7 @@ object TextQueries {
       budget: Long = 2048, shards: Int = 8): DataFrame = {
     import graft.operators.{CorpusManifest => M}
     val path = graft.FixtureCache.once(s, s"q225|$dir") {
-      val p = s"/root/repo/target/tmp/q225_manifest_" +
-        s.sparkContext.applicationId +
-        "_" + graft.FixtureCache.dirTag(dir)
+      val p = graft.Scratch.path(s, "q225_manifest", dir)
       val (all, late, forgotten) = manifestFixtureCorpus(s, dir)
       M.init(s, p, all.filter(!late), budget, shards)
       // ONE update carries the append AND the forget; the final
@@ -2493,9 +2480,7 @@ object TextQueries {
       budget: Long = 2048, shards: Int = 8): DataFrame = {
     import graft.operators.{CorpusManifest => M}
     val feed = graft.FixtureCache.once(s, s"q237|$dir") {
-      val p = s"/root/repo/target/tmp/q237_manifest_" +
-        s.sparkContext.applicationId +
-        "_" + graft.FixtureCache.dirTag(dir)
+      val p = graft.Scratch.path(s, "q237_manifest", dir)
       val (all, late, forgotten) = manifestFixtureCorpus(s, dir)
       M.init(s, p, all.filter(!late), budget, shards)
       M.updateWithFeed(s, p, all.filter(!forgotten),
@@ -2541,10 +2526,8 @@ object TextQueries {
   private def q226StorePath(s: SparkSession, dir: String): String = {
     import graft.streaming.{CorpusStreams, FrozenArtifacts, VerdictStore}
     graft.FixtureCache.once(s, s"q226|$dir") {
-      val app = s.sparkContext.applicationId +
-        "_" + graft.FixtureCache.dirTag(dir)
-      val p = s"/root/repo/target/tmp/q226_verdicts_$app"
-      val aP = s"/root/repo/target/tmp/q226_artifacts_$app"
+      val p = graft.Scratch.path(s, "q226_verdicts", dir)
+      val aP = graft.Scratch.path(s, "q226_artifacts", dir)
       val all = docs(s, dir)
         .select("doc_id", "lang", "n_chars", "text")
         .localCheckpoint(true)
@@ -2681,10 +2664,8 @@ object TextQueries {
   def q232ModelRotation(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{CorpusStreams, FrozenArtifacts, VerdictStore}
     val path = graft.FixtureCache.once(s, s"q232|$dir") {
-      val app = s.sparkContext.applicationId +
-        "_" + graft.FixtureCache.dirTag(dir)
-      val p = s"/root/repo/target/tmp/q232_verdicts_$app"
-      val aP = s"/root/repo/target/tmp/q232_artifacts_$app"
+      val p = graft.Scratch.path(s, "q232_verdicts", dir)
+      val aP = graft.Scratch.path(s, "q232_artifacts", dir)
       val all = docs(s, dir)
         .select("doc_id", "lang", "n_chars", "text")
         .localCheckpoint(true)
@@ -2755,9 +2736,7 @@ object TextQueries {
   def q234GdprChain(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{CorpusStreams, VerdictStore}
     val path = graft.FixtureCache.once(s, s"q234|$dir") {
-      val app = s.sparkContext.applicationId +
-        "_" + graft.FixtureCache.dirTag(dir)
-      val p = s"/root/repo/target/tmp/q234_verdicts_$app"
+      val p = graft.Scratch.path(s, "q234_verdicts", dir)
       val all = docs(s, dir)
         .select("doc_id", "lang", "n_chars", "text")
         .localCheckpoint(true)

@@ -11,6 +11,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def sf(dir: String): String = s"/root/testdata/$dir"
 
+  /** Path for a store this suite writes, under the application's
+    * [[Scratch]] root, so it is removed when the application stops. */
+  def scratch(name: String): String = Scratch.path(spark, name, suiteName)
+
   /** Run `f` with conf overrides, restoring prior values afterwards. */
   def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {
     val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }

@@ -2321,8 +2321,7 @@ class GraphQlSpec extends SparkSpec {
     // relationship-only returning SERVES: renderReturning answers the
     // relationship column over the returned rows
     val dir = sf("sf0.001")
-    val path = s"/root/repo/target/tmp/retrel_spec_" +
-      spark.sparkContext.applicationId
+    val path = scratch("retrel_spec")
     graft.sources.SnapshotStore.write(
       graft.Tables.load(spark, dir, "customer")
         .select("c_custkey", "c_mktsegment"), path)

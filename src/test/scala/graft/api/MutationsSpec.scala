@@ -401,7 +401,7 @@ class MutationsSpec extends SparkSpec {
 
   test("applyToStore: document folds in order against a persisted " +
     "snapshot, atomically rewritten; a stray table is refused") {
-    val path = s"target/tmp/mutspec_${java.util.UUID.randomUUID()}"
+    val path = scratch(s"mutspec_${java.util.UUID.randomUUID()}")
     SnapshotStore.write(snap, path)
     val doc =
       """mutation {

@@ -815,8 +815,7 @@ class PermissionsSpec extends SparkSpec {
     // (its FieldResults carry full rows — serving them would leak
     // ungranted columns); the refusal names the correct recipe
     val dir = sf("sf0.001")
-    val path = s"/root/repo/target/tmp/permrel_spec_" +
-      spark.sparkContext.applicationId
+    val path = scratch("permrel_spec")
     graft.sources.SnapshotStore.write(
       graft.Tables.load(spark, dir, "customer")
         .select("c_custkey", "c_mktsegment", "c_acctbal", "c_name"),

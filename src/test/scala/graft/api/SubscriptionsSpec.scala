@@ -153,8 +153,7 @@ class SubscriptionsSpec extends SparkSpec {
     "(the documented composition): after a restart, re-seeding the " +
     "fresh fold from the SnapshotStore serves exactly what an " +
     "unbroken subscription would have") {
-    val dir = s"/root/repo/target/tmp/sub_durable_" +
-      spark.sparkContext.applicationId
+    val dir = scratch("sub_durable")
     val req = Request("t", fields = Seq("k", "bal"),
       orderBy = Seq(Order("bal", desc = true), Order("k")),
       limit = Some(3))

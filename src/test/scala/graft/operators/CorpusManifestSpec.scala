@@ -18,9 +18,7 @@ class CorpusManifestSpec extends SparkSpec {
   private def corpus(ids: Seq[Long]) =
     ids.map(id => (id, 7L + id % 5)).toDF("doc_id", "ntok")
 
-  private def freshPath(tag: String): String =
-    s"/root/repo/target/tmp/cmspec_${tag}_" +
-      spark.sparkContext.applicationId
+  private def freshPath(tag: String): String = scratch(s"cmspec_$tag")
 
   private def canon(df: org.apache.spark.sql.DataFrame) =
     df.orderBy("shard", "pack_id").collect().map(_.toSeq).toSeq

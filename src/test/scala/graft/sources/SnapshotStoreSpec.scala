@@ -99,7 +99,7 @@ class SnapshotStoreSpec extends SparkSpec {
   test("JDBC sink round-trips through an embedded database") {
     // embedded Derby (on the Spark jars classpath) stands in for the
     // reference's Postgres — same spark-jdbc write/read path
-    val db = s"target/tmp/derby_snap_${System.nanoTime()}"
+    val db = scratch(s"derby_snap_${System.nanoTime()}")
     val url = s"jdbc:derby:$db;create=true"
     val snap = Seq(
       (1L, "alice", 3.5, true), (2L, "bob", 1.25, false),

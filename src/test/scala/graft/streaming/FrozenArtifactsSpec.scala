@@ -12,9 +12,7 @@ import org.apache.spark.sql.functions._
 class FrozenArtifactsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def storePath(tag: String): String =
-    s"/root/repo/target/tmp/frozen_${tag}_" +
-      spark.sparkContext.applicationId
+  private def storePath(tag: String): String = scratch(s"frozen_$tag")
 
   test("write → read round-trips the frozen LM, fences, and version " +
     "byte-for-byte") {

@@ -20,9 +20,7 @@ class VerdictStoreSpec extends SparkSpec {
     rows.toSeq.toDF("doc_id", "ratios_ok", "fences_ok", "clf_ok",
       "lm_ok", "verdict", "first_fail")
 
-  private def path(tag: String) =
-    s"/root/repo/target/tmp/vsspec_${tag}_" +
-      spark.sparkContext.applicationId
+  private def path(tag: String) = scratch(s"vsspec_$tag")
 
   private def canon(p: String) =
     VerdictStore.read(spark, p).orderBy("doc_id")
