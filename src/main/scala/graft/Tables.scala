@@ -99,6 +99,13 @@ object Tables {
       // serves clone one per query — for zero benefit here (~0.3 s per
       // live-serve call, measured on q193)
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // local files through java.nio where Hadoop without libhadoop
+      // forks chmod/readlink per file operation (checkpoint and state
+      // commits, parquet commits, swap markers); see NioLocalFs
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.NioLocalFs].getName)
 
   /** Register every table as a temp view so `spark.sql` surfaces work too. */
   def registerAll(spark: SparkSession, dir: String): Unit =

@@ -1,8 +1,12 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The snapshot sink/source layer (SURVEY §2.1 S4/S8) — the Postgres/Mongo
   * "current state" tables re-expressed as parquet snapshot stores with an
@@ -21,11 +25,30 @@ import org.apache.spark.sql.functions._
   */
 object SnapshotStore {
 
-  /** Write a snapshot partitioned by `partitionCols` (prunable reads). */
+  /** Schema descriptor of a store generation, inside the dataset
+    * directory: the schema the data was written with, field metadata
+    * included (what each parquet footer carries; Spark opens a file
+    * source all-nullable either way), so [[read]] opens the store
+    * without Spark's schema-inference job. The `_` prefix keeps it out
+    * of Spark's file listing, and living inside the directory it moves
+    * with the data through every [[AtomicSwap]] rename. Contract: a
+    * directory holding it was written whole by [[write]]. */
+  val SchemaFile = "_graft_schema.json"
+
+  /** Write a snapshot partitioned by `partitionCols` (prunable reads).
+    * An unpartitioned snapshot also gets its [[SchemaFile]]. */
   def write(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Unit = {
     val w = df.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(path)
+    // a partitioned read infers its partition columns from the layout
+    if (partitionCols.isEmpty) {
+      val f = new Path(path, SchemaFile)
+      val out = f.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+        .create(f, true)
+      try out.write(df.schema.json.getBytes(UTF_8))
+      finally out.close()
+    }
   }
 
   /** Write bucketed by the join key: each output file covers one hash
@@ -64,8 +87,20 @@ object SnapshotStore {
       .write.mode("overwrite").parquet(path)
   }
 
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** Open a snapshot: with the [[SchemaFile]] schema when [[write]]
+    * left one, else (partitioned or foreign directories) inferred. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val f = new Path(path, SchemaFile)
+    val schema =
+      try {
+        val in = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .open(f)
+        try Some(DataType.fromJson(new String(in.readAllBytes(), UTF_8))
+          .asInstanceOf[StructType])
+        finally in.close()
+      } catch { case _: java.io.FileNotFoundException => None }
+    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(path)
+  }
 
   /** JDBC sink option (S4): the reference writes its current-state tables
     * to Postgres (x/indexer/handlers/marketplace.go:100-426, DDL

@@ -213,4 +213,106 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(rows(SnapshotStore.applyDiff(replayed, feed, ks)) ===
       rows(after)) // at-least-once no-op
   }
+
+  private def hasDescriptor(p: String) =
+    new java.io.File(p, SnapshotStore.SchemaFile).isFile
+
+  test("read opens with the descriptor write left, and its schema is " +
+    "what parquet inference gives: a flat store with metadata and " +
+    "non-nullable columns, and a TokenSnapshot-shaped nested store") {
+    import graft.operators.MarketplaceModel.{BidRow, NftRow, OfferRow,
+      TokenSnapshot}
+    val meta = new org.apache.spark.sql.types.MetadataBuilder()
+      .putString("comment", "balance").build()
+    val flat = Seq((1L, 2, "a", 1.5), (2L, 3, null, 2.5))
+      .toDF("k", "n", "s", "bal")
+      .withColumn("bal", col("bal").as("bal", meta))
+    val snaps = Seq(
+      TokenSnapshot("T1", Some(NftRow("T1", "d", "alice", "u", 1, "5token",
+        "", "", "", None)), Seq(OfferRow("o1", "bob", "3token", "", "",
+        "T1")), Seq(BidRow(7L, "carol", "", "", "4token", "T1"))),
+      TokenSnapshot("T2", None, Nil, Nil)).toDS().toDF()
+      .withColumn("_batch", lit(3L))
+    for ((df, name) <- Seq(flat -> "flat", snaps -> "tokens")) {
+      val p = scratch(s"snap_desc_$name")
+      SnapshotStore.write(df, p)
+      assert(hasDescriptor(p))
+      val inferred = spark.read.parquet(p)
+      val got = SnapshotStore.read(spark, p)
+      assert(got.schema === inferred.schema, name)
+      assert(got.schema.json === inferred.schema.json, name) // metadata too
+      assert(got.collect().map(_.toString).toSet ===
+        inferred.collect().map(_.toString).toSet, name)
+    }
+    assert(SnapshotStore.read(spark, scratch("snap_desc_flat"))
+      .schema("bal").metadata === meta)
+    // the descriptor is what read trusts: a narrower one narrows the read
+    val p = scratch("snap_desc_flat")
+    val out = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration).create(
+      new org.apache.hadoop.fs.Path(p, SnapshotStore.SchemaFile), true)
+    try out.write(flat.select("k").schema.json.getBytes("UTF-8"))
+    finally out.close()
+    assert(SnapshotStore.read(spark, p).columns.toSeq === Seq("k"))
+  }
+
+  test("a directory write did not produce (plain df.write.parquet) is " +
+    "still read by inference") {
+    val p = scratch("snap_plain")
+    Seq((1L, "x"), (2L, "y")).toDF("k", "v").write.parquet(p)
+    assert(!hasDescriptor(p))
+    val got = SnapshotStore.read(spark, p)
+    assert(got.schema === spark.read.parquet(p).schema)
+    assert(got.orderBy("k").collect().map(_.getString(1)).toSeq ===
+      Seq("x", "y"))
+  }
+
+  test("an AtomicSwap rewrite that adds a column reads back with it: the " +
+    "descriptor swaps with the data") {
+    val p = scratch("snap_swap")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    AtomicSwap.initOrRewrite(fs, p)(tmp =>
+      SnapshotStore.write(Seq((1L, "x"), (2L, "y")).toDF("k", "v"), tmp))
+    AtomicSwap.initOrRewrite(fs, p)(tmp =>
+      SnapshotStore.write(SnapshotStore.read(spark, p)
+        .withColumn("w", col("k") * 10), tmp))
+    val got = SnapshotStore.read(spark, p)
+    assert(got.columns.toSeq === Seq("k", "v", "w"))
+    assert(got.schema === spark.read.parquet(p).schema)
+    assert(got.orderBy("k").collect().map(_.getLong(2)).toSeq ===
+      Seq(10L, 20L))
+  }
+
+  test("a partitioned write carries no descriptor and reads back exactly " +
+    "as inference reads it, also over an earlier unpartitioned write") {
+    val p = scratch("snap_parts")
+    val df = Seq(("2026-01-01", "k1", 1), ("2026-01-02", "k2", 2))
+      .toDF("dt", "key", "v")
+    SnapshotStore.write(df.select("key", "v"), p)
+    assert(hasDescriptor(p))
+    SnapshotStore.write(df, p, Seq("dt"))
+    assert(!hasDescriptor(p))
+    val got = SnapshotStore.read(spark, p)
+    val inferred = spark.read.parquet(p)
+    assert(got.schema === inferred.schema)
+    assert(got.columns.toSeq === Seq("key", "v", "dt"))
+    assert(got.collect().map(_.toString).toSet ===
+      inferred.collect().map(_.toString).toSet)
+  }
+
+  test("the descriptor is never a data row and never a .parquet file") {
+    val p = scratch("snap_rows")
+    SnapshotStore.write(Seq((1L, "x"), (2L, "y"), (3L, "z"))
+      .toDF("k", "v").repartition(2), p)
+    assert(!SnapshotStore.SchemaFile.endsWith(".parquet"))
+    val parquetFiles = new java.io.File(p).list().filter(_.endsWith(".parquet"))
+    assert(parquetFiles.length === 2)
+    assert(SnapshotStore.read(spark, p).count() === 3L)
+    assert(spark.read.parquet(p).count() === 3L)
+    assert(!spark.read.parquet(p).inputFiles
+      .exists(_.contains(SnapshotStore.SchemaFile)))
+    assert(!SnapshotStore.read(spark, p).inputFiles
+      .exists(_.contains(SnapshotStore.SchemaFile)))
+  }
 }
