@@ -639,9 +639,6 @@ object Mutations {
       s"has a composite key (${pKeys.mkString(", ")}) — child FK " +
       "columns reference single-column keys")
     val pKey = pKeys.head
-    AtomicSwap.recover(org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(pPath), spark.sparkContext.hadoopConfiguration),
-      pPath)
     val doomedDf = SnapshotStore.read(spark, pPath)
       .filter(where.toColumn).select(pKey)
     val probe = doomedDf.limit(CascadeInlineKeys + 1).collect()
@@ -696,9 +693,7 @@ object Mutations {
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val touched = fields.flatMap(f => tablesOf(f.m)).distinct
     var snaps: Map[String, DataFrame] = touched.map { t =>
-      val (path, _) = stores(t)
-      AtomicSwap.recover(fsOf(path), path)
-      t -> SnapshotStore.read(spark, path)
+      t -> SnapshotStore.read(spark, stores(t)._1)
     }.toMap
     // relationship-predicate children (r18) resolve against the
     // CURRENT folded state — a table an earlier field wrote is seen
@@ -713,7 +708,6 @@ object Mutations {
             s"no registered store for relationship child '$t' — a " +
               "mutation's relationship predicate reads tables from " +
               "the registry"))
-        AtomicSwap.recover(fsOf(path), path)
         val df = SnapshotStore.read(spark, path)
         snaps += t -> df
         df

@@ -24,8 +24,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *  1. ALL replacement bucket directories build aside under
   *     `<path>_forgetting` while the live store keeps serving;
   *  2. a `_FORGET_READY` marker records every (unit, has-replacement)
-  *     pair — written to a temp path and RENAMED into place, so the
-  *     marker either exists whole or not at all — and only then do
+  *     pair — published through [[graft.sources.AtomicSwap.publish]],
+  *     so the marker either exists whole or not at all — and only then do
   *     live directories start swapping, one delete+rename pair per
   *     bucket (two metadata operations);
   *  3. the work directory deletes last.
@@ -160,19 +160,13 @@ object BucketForget {
     val liveUnits = unitsUnder(fs, new Path(servingPath), affected.toSet)
     val units = liveUnits.map(u =>
       (u, fs.exists(new Path(work, u)))) // false = bucket emptied
-    // the marker publishes ATOMICALLY (the AtomicSwap ritual): bytes
-    // land in a temp file that renames into place only after a
-    // successful close. A crash mid-write leaves no marker, so
-    // recover() discards the untouched-store work dir instead of
-    // applying a TRUNCATED unit list — a silent partial forget.
-    val tmp = new Path(work, "_FORGET_READY.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(units.map { case (u, f) =>
-      s"$u\t${if (f) "1" else "0"}" }.mkString("\n")
-      .getBytes("UTF-8"))
-    finally out.close()
-    require(fs.rename(tmp, marker(servingPath)),
-      s"forget: cannot publish the _FORGET_READY marker under $work")
+    // the marker publishes ATOMICALLY: a crash mid-write leaves no
+    // marker, so recover() discards the untouched-store work dir
+    // instead of applying a TRUNCATED unit list — a silent partial
+    // forget
+    graft.sources.AtomicSwap.publish(fs, marker(servingPath),
+      units.map { case (u, f) => s"$u\t${if (f) "1" else "0"}" }
+        .mkString("\n"))
     applySwaps(fs, servingPath, units)
     fs.delete(work, true)
     affected

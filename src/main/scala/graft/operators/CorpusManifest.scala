@@ -104,13 +104,9 @@ object CorpusManifest {
   private def writeVersion(fs: FileSystem, path: String,
       v: Long): Unit = {
     val dst = new Path(s"$path/_version_$v")
-    if (!fs.exists(dst)) { // an identical crashed re-run already committed
-      val tmp = new Path(s"$path/_version_$v.tmp")
-      val out = fs.create(tmp, true)
-      out.write(v.toString.getBytes("UTF-8")); out.close()
-      require(fs.rename(tmp, dst) || fs.exists(dst),
-        s"manifest: cannot commit version $v")
-    }
+    // an identical crashed re-run may already have committed it
+    if (!fs.exists(dst))
+      graft.sources.AtomicSwap.publish(fs, dst, v.toString)
     versionMarkers(fs, path).filter(_._2 < v)
       .foreach { case (p, _) => fs.delete(p, false) }
     // GC orphans the anchored marker regex never matches: crashed
@@ -185,11 +181,9 @@ object CorpusManifest {
     // mid-delete is repaired by the re-run like any other blend
     fs.listStatus(new Path(path)).toSeq.map(_.getPath)
       .filter { p =>
-        val m = "s(\\d+)(_precompact|_compacting|_staging)?".r
-        p.getName match {
-          case m(n, _) => n.toInt >= shards
-          case _ => false
-        }
+        val name = graft.sources.AtomicSwap.datasetOf(p.getName,
+          staged = true).getOrElse(p.getName)
+        name.matches("s\\d+") && name.drop(1).toInt >= shards
       }.foreach(fs.delete(_, true))
     // a REBUILD over an existing store must bump PAST the old
     // generation — committing "1" under a surviving higher marker
@@ -291,11 +285,10 @@ object CorpusManifest {
   def read(spark: SparkSession, path: String): DataFrame = {
     version(spark, path) // loud on a store init never finished
     val fs = fsOf(spark, path)
-    val dirs = fs.listStatus(new Path(path)).toSeq
+    val live = fs.listStatus(new Path(path)).toSeq
       .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.matches("s\\d+(_precompact|_compacting)?"))
-    val live = dirs.map(_.replaceAll("_(precompact|compacting)$", ""))
-      .distinct.sorted
+      .map(n => graft.sources.AtomicSwap.datasetOf(n).getOrElse(n))
+      .filter(_.matches("s\\d+")).distinct.sorted
     live.map { name =>
       graft.sources.AtomicSwap.recover(fs, s"$path/$name")
       spark.read.parquet(s"$path/$name")

@@ -148,22 +148,13 @@ object IncrementalDedup {
     storeMeta(store)._1.getOrElse((Bands, RowsPerBand, ShingleLen,
       "xxhash"))
 
+  /** Open a dedup store (ingest or serving layout, either hash space):
+    * completes an interrupted [[AtomicSwap]] compaction and an
+    * interrupted [[BucketForget]] before the first read. */
   def loadStore(spark: SparkSession, path: String): DataFrame = {
-    // complete any interrupted serving-store compaction BEFORE the
-    // first read — recovery living only inside AtomicSwap.rewrite is
-    // unreachable for a reader that throws on the missing live path
-    // first (the IncrementalImageDedup/InvertedIndex discipline).
-    // Guarded: recover throws on a path that never existed, and most
-    // stores here are plain ingest paths with no swap history.
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    def ex(suffix: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(path + suffix))
-    if (ex("") || ex("_precompact") || ex("_compacting") ||
-        ex("_swapping"))
-      AtomicSwap.recover(fs, path)
-    // ...and any interrupted bucket-pruned forget (the finer-grained
-    // sibling ritual — see BucketForget)
+    AtomicSwap.recover(fs, path)
     BucketForget.recover(fs, path)
     // mergeSchema: a mixed store (legacy meta-less batch partitions +
     // self-described ones) must surface the meta columns no matter
@@ -432,30 +423,12 @@ object IncrementalDedup {
       sigs0.join(f.select(col(f.columns.head).as("doc_id")),
         Seq("doc_id"), "left_anti")
     }.getOrElse(sigs0)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
+    // a first build stages aside and publishes by one rename, so a
+    // crash never leaves a half-built directory a probe would read
+    AtomicSwap.initOrRewrite(org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(servingPath),
-      spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(servingPath)
-    // recover an interrupted PRIOR compaction before deciding whether
-    // this is a first build — a mid-swap crash leaves the live path
-    // missing with complete data at _precompact, and treating that as
-    // "first build" would orphan it
-    def ex(suffix: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(servingPath + suffix))
-    if (ex("") || ex("_precompact") || ex("_compacting") ||
-        ex("_swapping"))
-      AtomicSwap.recover(fs, servingPath)
-    if (!fs.exists(live)) {
-      // FIRST build is atomic too: build aside, one rename publishes —
-      // a crash mid-write must never leave a half-built directory that
-      // exists (a later probe would silently miss candidates)
-      val tmp = new org.apache.hadoop.fs.Path(servingPath + "_building")
-      fs.delete(tmp, true)
-      writeServing(sigs, tmp.toString, nb, rpb, sl, kern, nBuckets)
-      require(fs.rename(tmp, live),
-        s"compactToServing: cannot publish $servingPath")
-    } else AtomicSwap.rewrite(fs, servingPath)(tmp =>
-      writeServing(sigs, tmp, nb, rpb, sl, kern, nBuckets))
+      spark.sparkContext.hadoopConfiguration), servingPath)(at =>
+      writeServing(sigs, at, nb, rpb, sl, kern, nBuckets))
   }
 
   /** SIMILARITY SEARCH over the persisted store — "find near-duplicates

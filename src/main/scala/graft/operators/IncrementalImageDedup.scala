@@ -129,30 +129,10 @@ object IncrementalImageDedup {
       hashes0.join(f.select(col(f.columns.head).as("key")),
         Seq("key"), "left_anti")
     }.getOrElse(hashes0)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
+    AtomicSwap.initOrRewrite(org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(servingPath),
-      spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(servingPath)
-    // recover an interrupted PRIOR compaction before deciding whether
-    // this is a first build — a mid-swap crash leaves the live path
-    // missing with complete data at _precompact, and treating that as
-    // "first build" would orphan it
-    def ex(suffix: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(servingPath + suffix))
-    if (ex("") || ex("_precompact") || ex("_compacting") ||
-        ex("_swapping"))
-      AtomicSwap.recover(fs, servingPath)
-    if (!fs.exists(live)) {
-      // FIRST build is atomic too: build aside, one rename publishes —
-      // a crash mid-write must never leave a half-built directory that
-      // exists (a later probe would silently miss candidates)
-      val tmp = new org.apache.hadoop.fs.Path(servingPath + "_building")
-      fs.delete(tmp, true)
-      initStorePartitioned(hashes, tmp.toString, nb, bb, nBuckets)
-      require(fs.rename(tmp, live),
-        s"compactToServing: cannot publish $servingPath")
-    } else AtomicSwap.rewrite(fs, servingPath)(tmp =>
-      initStorePartitioned(hashes, tmp, nb, bb, nBuckets))
+      spark.sparkContext.hadoopConfiguration), servingPath)(at =>
+      initStorePartitioned(hashes, at, nb, bb, nBuckets))
   }
 
   /** The self-described metadata of a persisted store — (banding,
@@ -184,29 +164,10 @@ object IncrementalImageDedup {
   private def storeBanding(store: DataFrame): Option[(Int, Int)] =
     storeMeta(store)._1
 
-  def loadStore(spark: SparkSession, path: String): DataFrame = {
-    // complete any interrupted serving-store compaction BEFORE the
-    // first read — recovery living only inside AtomicSwap.rewrite is
-    // unreachable for a reader that throws on the missing live path
-    // first (the IvfIndex/InvertedIndex discipline). Guarded: recover
-    // throws on a path that never existed, and most stores here are
-    // plain ingest paths with no swap history.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    def ex(suffix: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(path + suffix))
-    if (ex("") || ex("_precompact") || ex("_compacting") ||
-        ex("_swapping"))
-      AtomicSwap.recover(fs, path)
-    // ...and any interrupted bucket-pruned forget (see BucketForget)
-    BucketForget.recover(fs, path)
-    // mergeSchema: a mixed store (legacy partitions without the
-    // banding columns + self-described ones) must surface the meta
-    // columns regardless of which footer schema inference samples —
-    // a meta-less pick would silently downgrade probes to the default
-    // banding (the IncrementalDedup.loadStore rationale).
-    spark.read.option("mergeSchema", "true").parquet(path)
-  }
+  /** [[IncrementalDedup.loadStore]]: the same recovery, the same
+    * mergeSchema read. */
+  def loadStore(spark: SparkSession, path: String): DataFrame =
+    IncrementalDedup.loadStore(spark, path)
 
   /** Bucket-pruned RIGHT-TO-BE-FORGOTTEN on the SERVING layout — the
     * hamming-store twin of [[IncrementalDedup.forgetFromServing]]:

@@ -1,6 +1,7 @@
 package graft.search
 
 import graft.functions.TextFunctions.tokens
+import graft.sources.SidecarCache
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -75,8 +76,7 @@ object InvertedIndex {
     (d.getDouble(0), d.getDouble(1), t.getDouble(0))
   }
 
-  /** One-row sidecar rewrite. First write is plain (no readers yet);
-    * every later rewrite goes through [[graft.sources.AtomicSwap]] — a
+  /** One-row sidecar commit through [[graft.sources.AtomicSwap]] — a
     * bare mode("overwrite") deletes before it writes, and a crash in
     * that window would leave the whole index unreadable. `lastStage`
     * records the most recent applied staging id so [[recoverStaged]]
@@ -92,11 +92,8 @@ object InvertedIndex {
         .toDF("n_docs", "n_tok_docs", "total_tokens", "n_buckets",
           "last_batch", "last_stage", "format")
         .coalesce(1).write.mode("overwrite").parquet(dir)
-    val statsPath = new org.apache.hadoop.fs.Path(s"$path/_stats")
-    val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(statsPath))
-      graft.sources.AtomicSwap.rewrite(fs, statsPath.toString)(out)
-    else out(statsPath.toString)
+    graft.sources.AtomicSwap.initOrRewrite(fsOf(spark, path),
+      s"$path/_stats")(out)
   }
 
   /** Readers MUST come through here: completes any interrupted swap of
@@ -113,8 +110,8 @@ object InvertedIndex {
     // probe must not pay a Spark job to re-read unchanged index
     // metadata (writers rewrite `_stats`, changing the fingerprint,
     // so the memo can never serve a stale row)
-    graft.sources.SidecarCache.cached(spark, s"$path/_stats") {
-      spark.read.parquet(s"$path/_stats").head
+    SidecarCache.cached(spark, s"$path/_stats") {
+      SidecarCache.read(spark, s"$path/_stats").head
     }
   }
 
@@ -172,12 +169,9 @@ object InvertedIndex {
     * replay). */
   private def readDelta(spark: SparkSession,
       stageDir: String): Option[StageDelta] = {
-    val delta = new org.apache.hadoop.fs.Path(s"$stageDir/_delta")
-    val fs = delta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(delta) || !fs.listStatus(delta)
-        .exists(_.getPath.getName.endsWith(".parquet")))
-      return None
-    val r = spark.read.parquet(s"$stageDir/_delta").head
+    val files = SidecarCache.parts(spark, s"$stageDir/_delta")
+    if (files.isEmpty) return None
+    val r = spark.read.parquet(files: _*).head
     Some(StageDelta(r.getAs[String]("stage"), r.getAs[Long]("batch_id"),
       r.getAs[Double]("n"), r.getAs[Double]("nt"), r.getAs[Double]("tot")))
   }
@@ -356,7 +350,7 @@ object InvertedIndex {
     graft.sources.AtomicSwap.rewrite(fs, path) { tmp =>
       spark.read.parquet(path).repartition(nBuckets, col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-      spark.read.parquet(s"$path/_stats").coalesce(1)
+      SidecarCache.read(spark, s"$path/_stats").coalesce(1)
         .write.mode("overwrite").parquet(s"$tmp/_stats")
     }
     (before, dataFiles())

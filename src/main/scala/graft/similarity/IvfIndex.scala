@@ -2,6 +2,7 @@ package graft.similarity
 
 import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.{dot, nearestCell, normalized}
+import graft.sources.SidecarCache
 // (VectorFunctions also supplies quantizeI8 / dotDequantI8 for the SQ8 path)
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -243,7 +244,7 @@ object IvfIndex {
   def append(emb: DataFrame, path: String): Unit = {
     val spark = emb.sparkSession
     recoverIndex(spark, path)
-    val cdf = spark.read.parquet(s"$path/_centroids")
+    val cdf = SidecarCache.read(spark, s"$path/_centroids")
     val book = collectCodebook(cdf.select(col("cent_id"), col("cent")))
     // layout from the driver-small sidecar; the root-listing sniff is
     // only a fallback for indexes built before the flag existed
@@ -357,20 +358,18 @@ object IvfIndex {
     * probe, wedging the index behind an un-compactable error. */
   private def tombstones(spark: SparkSession,
       path: String): Option[DataFrame] = {
-    val t = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(t))
-      Some(spark.read.schema("vec_id LONG").parquet(t.toString)
-        .distinct())
-    else None
+    val files = SidecarCache.parts(spark, s"$path/_tombstones")
+    if (files.isEmpty) None
+    else Some(spark.read.schema("vec_id LONG").parquet(files: _*)
+      .distinct())
   }
 
   private def readPqSidecar(spark: SparkSession,
       path: String): (Array[Double], Int, Int) =
     // driver-small codebook behind the fingerprint-validated memo —
     // rebuilds rewrite the sidecar and naturally invalidate it
-    graft.sources.SidecarCache.cached(spark, s"$path/_pq") {
-      val r = spark.read.parquet(s"$path/_pq").head
+    SidecarCache.cached(spark, s"$path/_pq") {
+      val r = SidecarCache.read(spark, s"$path/_pq").head
       (r.getAs[scala.collection.Seq[Double]]("cb").toArray,
         r.getAs[Int]("m"), r.getAs[Int]("ksub"))
     }
@@ -411,8 +410,8 @@ object IvfIndex {
       n
     }
     val before = dataFiles(hPath)
-    val nCells =
-      math.max(spark.read.parquet(s"$path/_centroids").count().toInt, 1)
+    val nCells = math.max(
+      SidecarCache.read(spark, s"$path/_centroids").count().toInt, 1)
     val tomb = tombstones(spark, path)
     graft.sources.AtomicSwap.rewrite(fs, path) { tmp =>
       // compaction is also the PHYSICAL half of [[forget]]: pending
@@ -426,12 +425,12 @@ object IvfIndex {
         data0.join(t, Seq("vec_id"), "left_anti"))
       data.repartition(nCells, col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-      spark.read.parquet(s"$path/_centroids").coalesce(1)
+      SidecarCache.read(spark, s"$path/_centroids").coalesce(1)
         .write.mode("overwrite").parquet(s"$tmp/_centroids")
       // PQ indexes carry a second sidecar; dropping it on compaction
       // would orphan the codes
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_pq")))
-        spark.read.parquet(s"$path/_pq").coalesce(1)
+        SidecarCache.read(spark, s"$path/_pq").coalesce(1)
           .write.mode("overwrite").parquet(s"$tmp/_pq")
     }
     (before, dataFiles(hPath))
@@ -446,9 +445,9 @@ object IvfIndex {
     // probe's driver-side cell scoring must not pay a Spark job to
     // re-collect an unchanged sidecar (build/compact rewrite it and
     // invalidate the memo)
-    val cents = graft.sources.SidecarCache.cached(
+    val cents = SidecarCache.cached(
       spark, s"$path/_centroids") {
-      spark.read.parquet(s"$path/_centroids").collect()
+      SidecarCache.read(spark, s"$path/_centroids").collect()
     }
     def dotLocal(a: Seq[Double], b: Array[Double]): Double =
       a.zip(b).map { case (x, y) => x * y }.sum

@@ -2,12 +2,19 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Crash-safe in-place rewrite of a directory dataset, shared by every
-  * compaction path (enrichment store, IVF index). The invariant: at any
-  * instant the data exists under AT LEAST one of `path`,
-  * `path_precompact` (the original, mid-swap) or `path_compacting` (the
-  * finished replacement, mid-swap) — and a rerun first completes or
-  * rolls back an interrupted swap before deleting anything.
+/** The store commit protocol: the one module that knows how a
+  * directory dataset is replaced, first committed and recovered, and
+  * how a small marker file is published. Every persisted store commits
+  * through it. The invariant: at any instant the data exists under AT
+  * LEAST one of `path`, `path_precompact` (the original, mid-swap) or
+  * `path_compacting` (the finished replacement, mid-swap) — and a rerun
+  * first completes or rolls back an interrupted swap before deleting
+  * anything.
+  *
+  * Writers: [[rewrite]] (an existing dataset), [[initOrRewrite]] (also
+  * the first commit, staged at `path_staging`) and [[publish]] (a small
+  * write-once file). Readers: [[recover]], which [[SnapshotStore.read]]
+  * calls itself.
   *
   * Swap discipline: two renames, never delete-then-rename, with every
   * rename's boolean result CHECKED (Hadoop FileSystems report most
@@ -37,7 +44,21 @@ object AtomicSwap {
     * delays readers once after a genuine writer crash. Test-tunable. */
   @volatile private[sources] var livenessGraceMs: Long = 10000L
 
-  private def lockOf(path: String) = new Path(path + "_swapping")
+  // the swap traces beside a dataset at `path`
+  private val Aside = "_precompact" // the original, moved aside
+  private val Replacement = "_compacting" // the finished replacement
+  private val Lock = "_swapping" // the writer's liveness marker
+  private val Stage = "_staging" // a first commit, built aside
+
+  private def lockOf(path: String) = new Path(path + Lock)
+
+  /** The dataset a directory entry named `name` is a swap trace of: a
+    * copy [[recover]] restores (`_precompact`, `_compacting`) and, with
+    * `staged`, also a first commit's stage, which is never served.
+    * None for any other name. */
+  def datasetOf(name: String, staged: Boolean = false): Option[String] =
+    (if (staged) Seq(Aside, Replacement, Stage) else Seq(Aside, Replacement))
+      .find(name.endsWith).map(s => name.dropRight(s.length))
 
   /** Test-only failpoint: specs inject a concurrent reader at a named
     * protocol step (a unit test cannot GC-pause the JVM mid-swap).
@@ -51,13 +72,14 @@ object AtomicSwap {
     * living only inside [[rewrite]] would be unreachable exactly when
     * it is needed (every entry point reads the path before it ever
     * rewrites it, so a mid-swap crash would wedge the dataset until the
-    * next rewrite that never comes). No-op when the path is live; waits
-    * out a FRESH liveness marker (live writer mid-swap) rather than
-    * racing it. */
+    * next rewrite that never comes). No-op when the path is live, and
+    * when neither it nor a copy of it exists (a dataset never
+    * committed: the caller's own read answers); waits out a FRESH
+    * liveness marker (live writer mid-swap) rather than racing it. */
   def recover(fs: FileSystem, path: String): Unit = {
     val live = new Path(path)
-    val tmp = new Path(path + "_compacting")
-    val old = new Path(path + "_precompact")
+    val tmp = new Path(path + Replacement)
+    val old = new Path(path + Aside)
     val lock = lockOf(path)
     // TWO recovering readers can reach the stale-marker branch together:
     // whoever renames first wins, and the loser must treat its lost race
@@ -100,8 +122,7 @@ object AtomicSwap {
         val recovered =
           if (fs.exists(old)) promote(old)
           else if (fs.exists(tmp)) promote(tmp)
-          else if (fs.exists(live)) true // a racing recoverer just won
-          else throw new java.io.FileNotFoundException(path)
+          else true // a racing recoverer just won, or nothing to recover
         if (recovered) {
           fs.delete(lock, false)
           return
@@ -110,25 +131,21 @@ object AtomicSwap {
     }
   }
 
-  /** [[rewrite]] that also handles the FIRST commit (r20, hoisted from
-    * the manifest/frozen-artifact stores so the protocol has ONE
-    * definition): an EXISTING dataset rides the two-rename swap; a
-    * dataset that never existed stages fully aside (`path_staging`)
-    * and commits by ONE rename — a crash mid-stage leaves only the
-    * stage dir (the dataset still "never existed", and the re-run's
-    * delete-then-restage repairs it), so readers can never see a
-    * partially-written first build. Recovers a crashed swap BEFORE
-    * the exists probe, so a mid-swap dataset takes the swap path
-    * instead of a shadowing stage. */
+  /** [[rewrite]] that also handles the FIRST commit: an EXISTING
+    * dataset rides the two-rename swap; a dataset that never existed
+    * stages fully aside (`path_staging`) and commits by ONE rename —
+    * a crash mid-stage leaves only the stage dir (the dataset still
+    * "never existed", and the re-run's delete-then-restage repairs
+    * it), so readers can never see a partially-written first build.
+    * Recovers a crashed swap BEFORE the exists probe, so a mid-swap
+    * dataset takes the swap path instead of a shadowing stage. */
   def initOrRewrite(fs: FileSystem, path: String)
       (write: String => Unit): Unit = {
     val live = new Path(path)
-    if (!fs.exists(live))
-      try recover(fs, path)
-      catch { case _: java.io.FileNotFoundException => () }
+    recover(fs, path)
     if (fs.exists(live)) rewrite(fs, path)(write)
     else {
-      val stage = new Path(path + "_staging")
+      val stage = new Path(path + Stage)
       fs.delete(stage, true)
       write(stage.toString)
       // a racing second initializer can land its rename first — then
@@ -158,13 +175,15 @@ object AtomicSwap {
 
   /** Rewrite `path` by having `write` produce the replacement at the tmp
     * location, then swap it live. `write` reads the live path freely —
-    * nothing moves until it returns. */
+    * nothing moves until it returns. A path that does not exist (after
+    * recovery) fails loudly: there is nothing to rewrite. */
   def rewrite(fs: FileSystem, path: String)(write: String => Unit): Unit = {
     val live = new Path(path)
-    val tmp = new Path(path + "_compacting")
-    val old = new Path(path + "_precompact")
+    val tmp = new Path(path + Replacement)
+    val old = new Path(path + Aside)
     val lock = lockOf(path)
     recover(fs, path)
+    if (!fs.exists(live)) throw new java.io.FileNotFoundException(path)
     fs.delete(tmp, true); fs.delete(old, true)
     write(tmp.toString)
     // liveness marker brackets the swap window: while it is fresh,
@@ -219,5 +238,23 @@ object AtomicSwap {
       fs.delete(old, true)
     } finally fs.delete(lock, false)
     ()
+  }
+
+  /** Publish the small file `at` holding `text`: the bytes land in
+    * `<at>.tmp`, which renames onto `at` only after a successful close,
+    * so a reader sees the whole file or none (a crash leaves at most
+    * the `.tmp`, which readers ignore). Write-once: an existing `at`
+    * is refused before anything is written, because a rename onto it
+    * would replace it and a delete-then-rename would open a window
+    * with no file at all. */
+  def publish(fs: FileSystem, at: Path, text: String): Unit = {
+    require(!fs.exists(at), s"publish: $at already exists")
+    val tmp = new Path(at.getParent, at.getName + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(tmp, at)) {
+      fs.delete(tmp, false)
+      throw new java.io.IOException(s"publish: cannot commit $at")
+    }
   }
 }

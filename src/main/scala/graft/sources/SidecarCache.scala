@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-side memo for DRIVER-SMALL index sidecars (`_stats` rows,
   * `_centroids` codebooks, store markers): a serving engine holds index
@@ -65,4 +65,27 @@ object SidecarCache {
       v
     }
   }
+
+  /** The committed part files of the sidecar directory `dir`: empty
+    * when it is absent or holds none (a writer crashed before its job
+    * committed). */
+  def parts(spark: SparkSession, dir: String): Seq[String] = {
+    val p = new Path(dir)
+    try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p).toSeq.map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).map(_.toString)
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  /** Open the sidecar directory `dir` through its part files. Spark's
+    * DataSource logs "All paths were ignored" whenever every path it is
+    * given has a `_`- or `.`-prefixed name (which every sidecar has),
+    * although it reads them all the same; naming the part files keeps
+    * that WARN for reads that really ignore data. A directory without
+    * part files opens as given, so Spark's own error answers. */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    parts(spark, dir) match {
+      case Nil => spark.read.parquet(dir)
+      case files => spark.read.parquet(files: _*)
+    }
 }

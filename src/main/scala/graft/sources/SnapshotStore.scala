@@ -88,13 +88,16 @@ object SnapshotStore {
   }
 
   /** Open a snapshot: with the [[SchemaFile]] schema when [[write]]
-    * left one, else (partitioned or foreign directories) inferred. */
+    * left one, else (partitioned or foreign directories) inferred.
+    * Completes an interrupted [[AtomicSwap]] of the store first (the
+    * reader contract), so callers need no recovery of their own. */
   def read(spark: SparkSession, path: String): DataFrame = {
     val f = new Path(path, SchemaFile)
+    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    AtomicSwap.recover(fs, path)
     val schema =
       try {
-        val in = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .open(f)
+        val in = fs.open(f)
         try Some(DataType.fromJson(new String(in.readAllBytes(), UTF_8))
           .asInstanceOf[StructType])
         finally in.close()

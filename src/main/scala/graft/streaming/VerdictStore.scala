@@ -84,23 +84,10 @@ object VerdictStore {
 
   // ---- bucket-count marker (committed LAST by init, so a reader
   // finding it knows every bucket dir exists) ------------------------
-
-  private def writeMarker(fs: FileSystem, at: Path, text: String)
-      : Unit = {
-    val tmp = new Path(at.getParent, at.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    out.write(text.getBytes("UTF-8")); out.close()
-    // every marker here is WRITE-ONCE (init's _buckets behind its
-    // guard, a run floor only at first attach, rebucket's staged
-    // tree): the commit is one rename onto a name that does not
-    // exist, so readers never see a marker vanish mid-rewrite — an
-    // existing destination is a caller bug and a delete-then-rename
-    // would reopen exactly that no-marker window
-    require(!fs.exists(at),
-      s"verdict store: marker $at already exists (markers are " +
-        "write-once; this is a caller bug)")
-    require(fs.rename(tmp, at), s"verdict store: cannot commit $at")
-  }
+  // every marker here is WRITE-ONCE (init's _buckets behind its
+  // guard, a run floor only at first attach, rebucket's staged tree)
+  // and committed by AtomicSwap.publish, so readers never see a marker
+  // vanish mid-rewrite
 
   private def readMarker(fs: FileSystem, at: Path): String = {
     val in = fs.open(at)
@@ -108,26 +95,17 @@ object VerdictStore {
     finally in.close()
   }
 
-  /** Recover an interrupted ROOT-level swap ([[rebucket]] moves the
-    * whole store directory) — the AtomicSwap reader contract one
-    * level up from the per-bucket recovery [[readBucket]] does.
-    * EVERY entry point that consults the store's filesystem calls
-    * this FIRST: a crashed rebucket leaves the store at its
-    * `_precompact` name, and an entry point that reads markers (or
+  /** The store's bucket count, persisted by [[init]]. Like every
+    * entry point that consults the store's filesystem, it first
+    * recovers an interrupted ROOT-level swap ([[rebucket]] moves the
+    * whole store directory): an entry point that read markers (or
     * their absence) before recovery would act on the missing-root
-    * illusion — a sink re-attach would overwrite its persisted
-    * floor, an init would shadow the orphaned store, a retire would
-    * silently no-op. A never-existed path falls through untouched
-    * (each caller's own guard answers). */
-  private def recoverRoot(fs: FileSystem, path: String): Unit =
-    if (!fs.exists(new Path(path)))
-      try graft.sources.AtomicSwap.recover(fs, path)
-      catch { case _: java.io.FileNotFoundException => () }
-
-  /** The store's bucket count, persisted by [[init]]. */
+    * illusion — a sink re-attach would overwrite its persisted floor,
+    * an init would shadow the orphaned store, a retire would silently
+    * no-op. */
   def numBuckets(spark: SparkSession, path: String): Int = {
     val fs = fsOf(spark, path)
-    recoverRoot(fs, path)
+    graft.sources.AtomicSwap.recover(fs, path)
     val at = new Path(s"$path/_buckets")
     require(fs.exists(at), s"verdict store at $path: no _buckets " +
       "marker — not an initialized (r20 bucket-partitioned) store")
@@ -172,18 +150,17 @@ object VerdictStore {
       }
       floors.foreach { case (tag, floor, retired) =>
         val name = if (retired) s"$tag.retired" else tag
-        writeMarker(fs, new Path(s"$tmp/_runs/$name"), floor.toString)
+        graft.sources.AtomicSwap.publish(fs,
+          new Path(s"$tmp/_runs/$name"), floor.toString)
       }
-      writeMarker(fs, new Path(s"$tmp/_buckets"), newBuckets.toString)
+      graft.sources.AtomicSwap.publish(fs, new Path(s"$tmp/_buckets"),
+        newBuckets.toString)
     }
   }
 
   private def readBucket(spark: SparkSession, path: String, k: Int)
-      : DataFrame = {
-    val dir = bucketDir(path, k)
-    graft.sources.AtomicSwap.recover(fsOf(spark, path), dir)
-    graft.sources.SnapshotStore.read(spark, dir)
-  }
+      : DataFrame =
+    graft.sources.SnapshotStore.read(spark, bucketDir(path, k))
 
   /** The buckets a key frame's doc_ids hash into — a distinct-collect
     * bounded by the bucket count, the only driver state any write
@@ -204,11 +181,11 @@ object VerdictStore {
       buckets: Int = DefaultBuckets): Unit = {
     require(buckets > 0, s"init: bucket count must be positive")
     val fs = fsOf(spark, path)
-    // a crashed rebucket leaves the WHOLE store at its _precompact
+    // a crashed rebucket leaves the WHOLE store under a swap-trace
     // name — recover first, so the guard sees the restored store
     // instead of writing a fresh one over the orphaned original
     // (which the next root swap's cleanup would then delete)
-    recoverRoot(fs, path)
+    graft.sources.AtomicSwap.recover(fs, path)
     require(!fs.exists(new Path(s"$path/_buckets")),
       s"init: $path is already an initialized verdict store — " +
         "re-init of a live store is not crash-safe; write to a " +
@@ -222,7 +199,8 @@ object VerdictStore {
       graft.sources.SnapshotStore.write(
         tagged.filter(col("_b") === k).drop("_b"), bucketDir(path, k))
     }
-    writeMarker(fs, new Path(s"$path/_buckets"), buckets.toString)
+    graft.sources.AtomicSwap.publish(fs, new Path(s"$path/_buckets"),
+      buckets.toString)
   }
 
   /** Upsert one scored batch under `epoch` (> 0): per doc_id the
@@ -443,7 +421,7 @@ object VerdictStore {
   def runFloors(spark: SparkSession, path: String)
       : Seq[(String, Long, Boolean)] = {
     val fs = fsOf(spark, path)
-    recoverRoot(fs, path)
+    graft.sources.AtomicSwap.recover(fs, path)
     val dir = new Path(s"$path/_runs")
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq.map(_.getPath)
@@ -469,7 +447,7 @@ object VerdictStore {
     // missing root would masquerade as a first attach and the floor
     // rewrite below would lift this run's replays above every forget
     // fence written since the original attach
-    recoverRoot(fs, path)
+    graft.sources.AtomicSwap.recover(fs, path)
     val at = runMarker(path, tag)
     require(!fs.exists(new Path(at.toString + ".retired")),
       s"sink: run '$tag' is retired — a retired run's checkpoints " +
@@ -478,7 +456,7 @@ object VerdictStore {
     if (fs.exists(at)) readMarker(fs, at).toLong
     else {
       val floor = maxEpoch(spark, path)
-      writeMarker(fs, at, floor.toString)
+      graft.sources.AtomicSwap.publish(fs, at, floor.toString)
       floor
     }
   }
@@ -490,7 +468,8 @@ object VerdictStore {
   def retireRun(spark: SparkSession, path: String, tag: String)
       : Unit = {
     val fs = fsOf(spark, path)
-    recoverRoot(fs, path) // a missing root would silently no-op below
+    // a missing root would silently no-op below
+    graft.sources.AtomicSwap.recover(fs, path)
     val at = runMarker(path, tag)
     val done = new Path(at.toString + ".retired")
     if (fs.exists(at) && !fs.exists(done))

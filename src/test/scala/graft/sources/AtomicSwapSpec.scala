@@ -232,4 +232,53 @@ class AtomicSwapSpec extends SparkSpec {
     assert(nested.isEmpty, s"staging nested into live: ${nested.toSeq}")
     assert(rows(r + "_staging") === 3, "the loser's data is preserved")
   }
+
+  test("recover on a path with no trace creates nothing and throws " +
+    "nothing") {
+    val d = java.nio.file.Files.createTempDirectory("swap_absent")
+    val p = d.toString + "/d"
+    AtomicSwap.recover(fs, p)
+    assert(d.toFile.list().isEmpty,
+      s"recover created ${d.toFile.list().toSeq}")
+  }
+
+  test("publish: writes the file whole, refuses an existing destination " +
+    "and leaves no <at>.tmp behind") {
+    val d = java.nio.file.Files.createTempDirectory("swap_pub")
+    val at = new org.apache.hadoop.fs.Path(d.toString, "_marker")
+    AtomicSwap.publish(fs, at, "7")
+    val in = fs.open(at)
+    try assert(new String(in.readAllBytes(), "UTF-8") === "7")
+    finally in.close()
+    val e = intercept[IllegalArgumentException](
+      AtomicSwap.publish(fs, at, "8"))
+    assert(e.getMessage.contains("already exists"))
+    val in2 = fs.open(at)
+    try assert(new String(in2.readAllBytes(), "UTF-8") === "7",
+      "a refused publish changed the file")
+    finally in2.close()
+    val names = d.toFile.list().toSeq
+    assert(!names.exists(_.contains(".tmp")), s"tmp left: $names")
+  }
+
+  test("the swap-trace names appear in no main source file but " +
+    "AtomicSwap.scala") {
+    import java.io.File
+    val src = new File("src/main/scala")
+    assert(src.isDirectory, s"run from the repo root: $src")
+    def files(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(files) else Seq(f)
+    val trace = "_precompact|_compacting|_swapping|_building".r
+    val offenders = for {
+      f <- files(src)
+      if f.getName.endsWith(".scala") && f.getName != "AtomicSwap.scala"
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines()
+        .zipWithIndex.toSeq
+      code = line.trim
+      if !(code.startsWith("//") || code.startsWith("*") ||
+        code.startsWith("/*"))
+      if trace.findFirstIn(code).isDefined
+    } yield s"${f.getPath}:${i + 1}: $code"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

@@ -54,4 +54,44 @@ class SidecarCacheSpec extends SparkSpec {
     assert(get() == 1)
     assert(get() == 2)
   }
+
+  test("index searches open their `_`-named sidecars without Spark's " +
+    "\"All paths were ignored\" WARN") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.spark.sql.functions.col
+    val docs = graft.Tables.load(spark, sf("sf0.001"), "documents")
+    val emb = graft.Tables.load(spark, sf("sf0.001"), "embeddings")
+    val inv = java.nio.file.Files.createTempDirectory("sc_inv").toString
+    val ivf = java.nio.file.Files.createTempDirectory("sc_ivf").toString
+    graft.search.InvertedIndex.build(docs, inv, nBuckets = 8)
+    graft.similarity.IvfIndex.build(emb, ivf, nCells = 8)
+    val query = emb.filter(col("vec_id") === 1)
+      .select(col("embedding").cast("array<double>"))
+      .head().getSeq[Double](0).toArray
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("sidecar-warn", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[Logger]
+    appender.start()
+    logger.addAppender(appender)
+    try {
+      graft.search.InvertedIndex.search(spark, inv, Seq("join", "hash"))
+        .collect()
+      graft.similarity.IvfIndex.search(spark, ivf, query, nProbe = 2,
+        k = 3).collect()
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    val ignored = seen.toArray.map(_.toString)
+      .filter(_.contains("All paths were ignored"))
+    assert(ignored.isEmpty, ignored.mkString("\n"))
+  }
 }
