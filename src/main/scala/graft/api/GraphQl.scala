@@ -1208,15 +1208,6 @@ object GraphQl {
       single = single)
   }
 
-  /** Parse one GraphQL read query against `schema` → the same
-    * [[Request]] the DSL builds. Never throws.
-    *
-    * `variables` is the request's JSON variables map (the way every
-    * Hasura client ships literals): `query ($k: bigint!) { ... }` with
-    * `{"k": 50}`. Declared variables substitute at `$name` value
-    * positions; an undeclared `$name`, an unbound declared variable,
-    * or an unused binding is an error — silent nulls would be the
-    * wrong-rows failure mode. */
   /** The request's JSON variables map → parsed values. */
   private def jsonVars(variables: String): Map[String, V] = {
     val root = mapper.readTree(
@@ -1291,75 +1282,18 @@ object GraphQl {
     p.variables = resolved.result()
   }
 
-  def parse(query: String, schema: Schema = fixtureSchema,
-      variables: String = "{}",
-      operationName: Option[String] = None): Either[String, Request] =
-    try {
-      val vars = jsonVars(variables)
-      val (allToks, frags) = extractFragments(tokenize(query))
-      // multi-operation documents select by operationName (the wire
-      // field every client POSTs); variable declared/bound/used
-      // checks apply to the CHOSEN operation, per the spec
-      val (opToks, nOps) = chooseOperation(allToks, operationName)
-      val p = new P(opToks)
-      p.fragments = frags
-      // optional operation header: `query [Name] [($var: type, ...)]`;
-      // `subscription` parses IDENTICALLY — a subscription document is
-      // a read query served continuously (graft.api.Subscriptions
-      // routes the parsed Request to the streaming twins). The keyword
-      // still matters to `_stream` roots (subscription-only).
-      var isSub = false
-      p.peek match {
-        // a mutation chosen by operationName (splitOperations accepts
-        // mutation headers) must be diagnosed AS a mutation — falling
-        // to the shorthand branch would mis-blame the variables or '{'
-        case Name("mutation", pos) =>
-          bad(s"the operation at $pos is a mutation — serve it " +
-            "through parseMutationFields, not the read path")
-        case Name(kw @ ("query" | "subscription"), _) =>
-          isSub = kw == "subscription"
-          p.next()
-          p.peek match { case Name(_, _) => p.next(); case _ => () }
-          parseOpVariables(p, vars, multiOp = nOps > 1)
-        case _ =>
-          // the bare `{...}` shorthand declares nothing, so any bound
-          // variable is an error (same rule as an explicit header)
-          vars.keySet.toSeq.sorted.headOption.foreach(k =>
-            bad(s"variables.$k bound but not declared by the operation"))
-      }
-      p.expect('{')
-      val (rootKey, rootKept, rootOp) =
-        parseRootField(p, schema, inSubscription = isSub)
-      if (!p.isPunct('}'))
-        bad("this document selects MULTIPLE root fields — serve it " +
-          "through parseRoots (one DataFrame per root)")
-      p.expect('}')
-      p.peek match {
-        case Eof(_) => ()
-        case t => bad(s"trailing content at ${t.pos}")
-      }
-      (p.variables.keySet -- p.used).toSeq.sorted.headOption.foreach(k =>
-        bad(s"variable $$$k declared and bound but never used — " +
-          "a dropped filter returns wrong rows silently"))
-      checkFragmentsUsed(p, allToks, nOps)
-      // the Request API answers ONE DataFrame: a document whose only
-      // root is directive-excluded has nothing to answer with —
-      // parseRoots serves the spec's empty-selection case
-      if (!rootKept)
-        bad(s"$rootKey: the only root field is excluded by its " +
-          "directives — nothing to serve (parseRoots drops excluded " +
-          "roots)")
-      rootOp match {
-        case ReadRoot(req) => Right(req)
-        case ByPkRoot(req) => Right(req)
-        case AggRoot(_) => bad(s"$rootKey: aggregate roots serve " +
-          "through parseRootAggregate (one root) or parseRoots " +
-          "(batched with reads)")
-        case StreamRoot(_) => bad(s"$rootKey: `_stream` roots serve " +
-          "through parseStream (one root) or parseRoots (batched " +
-          "into a subscription document)")
-      }
-    } catch {
+  // ---- the document front end ----------------------------------------
+
+  /** The operation kinds the read entry points serve (the bare `{...}`
+    * shorthand is a query). */
+  private val readOps = Set("query", "subscription")
+
+  /** The one exception → `Left` mapping every entry point shares: the
+    * parser's [[Bad]], a malformed number literal, a Spark/QueryBuilder
+    * `require`, and a malformed variables map. */
+  private def guarded[A](f: => A): Either[String, A] =
+    try Right(f)
+    catch {
       case Bad(m) => Left(m)
       case e: NumberFormatException => Left(s"bad number: ${e.getMessage}")
       case e: IllegalArgumentException => Left(e.getMessage)
@@ -1367,6 +1301,128 @@ object GraphQl {
         Left(s"variables: not valid JSON: ${e.getOriginalMessage}")
     }
 
+  /** The document-level pass of every entry point: read the variables
+    * JSON, tokenize and split off the fragment definitions, pick the
+    * operation (`operationName`, the wire field every client POSTs),
+    * read its header (`query|mutation|subscription [Name]
+    * [($var: type, ...)]` or the bare `{...}` shorthand, which is a
+    * query declaring nothing), then run `body` inside the outer braces
+    * with the parser and the operation kind. After the body: no
+    * trailing content, every declared variable used, every fragment
+    * spread somewhere in the document. An operation of a kind outside
+    * `serves` is refused by name. `variables = None` is a surface that
+    * takes no operation variables (introspection): declaring one is an
+    * error. Throws [[Bad]]; callers map through [[guarded]]. */
+  private def document[A](text: String, variables: Option[String],
+      operationName: Option[String], serves: Set[String])
+      (body: (P, String) => A): A = {
+    val vars = variables.map(jsonVars)
+    val (allToks, frags) = extractFragments(tokenize(text))
+    // variable declared/bound/used checks apply to the CHOSEN
+    // operation, per the spec; fragment use is document-wide
+    val (opToks, nOps) = chooseOperation(allToks, operationName)
+    val p = new P(opToks)
+    p.fragments = frags
+    val head = p.peek
+    val kind = head match {
+      case Name(k @ ("query" | "mutation" | "subscription"), _) => k
+      case _ => "query"
+    }
+    // a wrong-kind operation chosen by operationName (splitOperations
+    // accepts every header) is diagnosed AS that kind — falling
+    // through would mis-blame the variables or '{'
+    if (!serves(kind)) {
+      if (serves("mutation"))
+        bad(s"expected 'mutation' at ${head.pos} (read queries go " +
+          "through parse)")
+      if (kind == "mutation")
+        bad(s"the operation at ${head.pos} is a mutation — serve it " +
+          "through parseMutationFields, not the read path")
+      if (serves("subscription"))
+        bad("<table>_stream is a subscription-only surface (Hasura " +
+          "serves it over no other operation type)")
+      bad(s"the operation at ${head.pos} is a $kind — introspection " +
+        "is served over query operations")
+    }
+    head match {
+      case Name(_, _) =>
+        p.next()
+        p.peek match { case Name(_, _) => p.next(); case _ => () }
+      case _ => ()
+    }
+    vars match {
+      case Some(vs) => parseOpVariables(p, vs, multiOp = nOps > 1)
+      case None =>
+        if (p.isPunct('('))
+          bad("operation variables are not supported in the " +
+            "introspection subset (the meta answer is static — " +
+            "inline the literals)")
+    }
+    p.expect('{')
+    val out = body(p, kind)
+    p.expect('}')
+    p.peek match {
+      case Eof(_) => ()
+      case t => bad(s"trailing content at ${t.pos}")
+    }
+    (p.variables.keySet -- p.used).toSeq.sorted.headOption.foreach(k =>
+      bad(s"variable $$$k declared and bound but never used — " +
+        "a dropped filter reads or writes the wrong rows silently"))
+    checkFragmentsUsed(p, allToks, nOps)
+    out
+  }
+
+  /** The one-root surfaces ([[parse]], [[parseRootAggregate]],
+    * [[parseStream]]): the [[parseRoots]] root grammar held to exactly
+    * one root field, optionally of the kind `suffix` names, whose
+    * (response key, RootOp) `pick` projects. A root excluded by its
+    * directives has nothing to answer with (parseRoots drops excluded
+    * roots). */
+  private def oneRoot[A](text: String, variables: String,
+      operationName: Option[String], serves: Set[String], schema: Schema,
+      suffix: Option[String])(pick: PartialFunction[(String, RootOp), A])
+      : Either[String, A] = guarded {
+    val (key, kept, op) =
+      document(text, Some(variables), operationName, serves) { (p, kind) =>
+        val root = parseRootField(p, schema, kind == "subscription", suffix)
+        if (!p.isPunct('}'))
+          bad("this document selects MULTIPLE root fields — serve it " +
+            "through parseRoots (one DataFrame per root)")
+        root
+      }
+    if (!kept)
+      bad(s"$key: the only root field is excluded by its directives — " +
+        "nothing to serve (parseRoots drops excluded roots)")
+    pick((key, op))
+  }
+
+  /** Parse one GraphQL read query against `schema` → the same
+    * [[Request]] the DSL builds. Never throws.
+    *
+    * `variables` is the request's JSON variables map (the way every
+    * Hasura client ships literals): `query ($k: bigint!) { ... }` with
+    * `{"k": 50}`. Declared variables substitute at `$name` value
+    * positions; an undeclared `$name`, an unbound declared variable,
+    * or an unused binding is an error — silent nulls would be the
+    * wrong-rows failure mode. The operation header, `operationName`,
+    * variable and fragment rules are the shared [[document]] pass; a
+    * `query` or `subscription` operation (or the bare shorthand)
+    * serves here, a mutation is refused by name. The one root may be
+    * a table read or a `<table>_by_pk` lookup; an aggregate or
+    * `_stream` root, or a second root, names its own entry point. */
+  def parse(query: String, schema: Schema = fixtureSchema,
+      variables: String = "{}",
+      operationName: Option[String] = None): Either[String, Request] =
+    oneRoot(query, variables, operationName, readOps, schema, None) {
+      case (_, ReadRoot(req)) => req
+      case (_, ByPkRoot(req)) => req
+      case (key, AggRoot(_)) => bad(s"$key: aggregate roots serve " +
+        "through parseRootAggregate (one root) or parseRoots (batched " +
+        "with reads)")
+      case (key, StreamRoot(_)) => bad(s"$key: `_stream` roots serve " +
+        "through parseStream (one root) or parseRoots (batched into a " +
+        "subscription document)")
+    }
 
   /** Parse a MULTI-ROOT read document — Hasura serves any number of
     * root fields per query operation (`{ a: customer {...} orders
@@ -1381,67 +1437,34 @@ object GraphQl {
   def parseRoots(query: String, schema: Schema = fixtureSchema,
       variables: String = "{}",
       operationName: Option[String] = None)
-      : Either[String, Seq[(String, RootOp)]] =
-    try {
-      val vars = jsonVars(variables)
-      val (allToks, frags) = extractFragments(tokenize(query))
-      val (opToks, nOps) = chooseOperation(allToks, operationName)
-      val p = new P(opToks)
-      p.fragments = frags
-      // `_stream` roots are admitted only under an explicit
-      // `subscription` header (Hasura serves them over no other
-      // operation type) — track the keyword for parseRootField
-      var isSub = false
-      p.peek match {
-        case Name("mutation", pos) =>
-          bad(s"the operation at $pos is a mutation — serve it " +
-            "through parseMutationFields, not the read path")
-        case Name(kw @ ("query" | "subscription"), _) =>
-          isSub = kw == "subscription"
-          p.next()
-          p.peek match { case Name(_, _) => p.next(); case _ => () }
-          parseOpVariables(p, vars, multiOp = nOps > 1)
-        case _ =>
-          vars.keySet.toSeq.sorted.headOption.foreach(k =>
-            bad(s"variables.$k bound but not declared by the operation"))
+      : Either[String, Seq[(String, RootOp)]] = guarded {
+    // `_stream` roots are admitted only under an explicit
+    // `subscription` header (Hasura serves them over no other
+    // operation type)
+    val allRoots =
+      document(query, Some(variables), operationName, readOps) { (p, kind) =>
+        val roots = Seq.newBuilder[(String, Boolean, RootOp)]
+        while (!p.isPunct('}'))
+          roots += parseRootField(p, schema, kind == "subscription")
+        roots.result()
       }
-      p.expect('{')
-      val roots = Seq.newBuilder[(String, Boolean, RootOp)]
-      while (!p.isPunct('}'))
-        roots += parseRootField(p, schema, inSubscription = isSub)
-      p.expect('}')
-      p.peek match {
-        case Eof(_) => ()
-        case t => bad(s"trailing content at ${t.pos}")
-      }
-      (p.variables.keySet -- p.used).toSeq.sorted.headOption.foreach(k =>
-        bad(s"variable $$$k declared and bound but never used — " +
-          "a dropped filter returns wrong rows silently"))
-      checkFragmentsUsed(p, allToks, nOps)
-      // 5.3.2 on roots: identical repeats collapse; distinct requests
-      // under one response key refuse; excluded roots contribute
-      // nothing (they already fully compiled)
-      val allRoots = roots.result()
-      // `{ }` is a GraphQL syntax error, not a directive exclusion —
-      // diagnose it as the empty selection it is
-      if (allRoots.isEmpty) bad("empty selection set at the document root")
-      val kept = allRoots.filter(_._2).map(t => (t._1, t._3))
-        .distinct
-      val dupKeys = kept.map(_._1).diff(kept.map(_._1).distinct).distinct
-      if (dupKeys.nonEmpty)
-        bad(s"duplicate root response key(s): ${dupKeys.mkString(", ")}" +
-          " — alias the colliding roots")
-      if (kept.isEmpty)
-        bad("every root field is excluded by its directives — " +
-          "nothing to serve")
-      Right(kept)
-    } catch {
-      case Bad(m) => Left(m)
-      case e: NumberFormatException => Left(s"bad number: ${e.getMessage}")
-      case e: IllegalArgumentException => Left(e.getMessage)
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        Left(s"variables: not valid JSON: ${e.getOriginalMessage}")
-    }
+    // `{ }` is a GraphQL syntax error, not a directive exclusion —
+    // diagnose it as the empty selection it is
+    if (allRoots.isEmpty) bad("empty selection set at the document root")
+    // 5.3.2 on roots: identical repeats collapse; distinct requests
+    // under one response key refuse; excluded roots contribute
+    // nothing (they already fully compiled)
+    val kept = allRoots.filter(_._2).map(t => (t._1, t._3))
+      .distinct
+    val dupKeys = kept.map(_._1).diff(kept.map(_._1).distinct).distinct
+    if (dupKeys.nonEmpty)
+      bad(s"duplicate root response key(s): ${dupKeys.mkString(", ")}" +
+        " — alias the colliding roots")
+    if (kept.isEmpty)
+      bad("every root field is excluded by its directives — " +
+        "nothing to serve")
+    kept
+  }
 
   /** Evaluate parsed roots in document order — one DataFrame per root,
     * each through the same [[QueryBuilder.run]] the one-root path
@@ -1492,16 +1515,21 @@ object GraphQl {
     * @include/@skip gate the field's contribution while it still fully
     * compiles (the conditionalKeep contract). `<table>_by_pk`,
     * `<table>_aggregate`, and — under a subscription operation —
-    * `<table>_stream` roots serve here too. Shared by [[parse]]
-    * (exactly one root) and [[parseRoots]] (Hasura's multi-root
-    * batching). */
+    * `<table>_stream` roots serve here too. Shared by the one-root
+    * surfaces ([[oneRoot]]) and [[parseRoots]] (Hasura's multi-root
+    * batching); a one-root surface that serves one root kind names
+    * its `suffix`, checked before the field's arguments parse. */
   private def parseRootField(p: P, schema: Schema,
-      inSubscription: Boolean = false): (String, Boolean, RootOp) = {
+      inSubscription: Boolean, suffix: Option[String] = None)
+      : (String, Boolean, RootOp) = {
     val rfirst = p.name("root table")
     val (ralias, rootName) =
       if (p.isPunct(':')) {
         p.expect(':'); (Some(rfirst), p.name("root table"))
       } else (None, rfirst)
+    suffix.filterNot(rootName.endsWith).foreach(sfx =>
+      bad(s"$rootName: expected <table>$sfx (plain reads go through " +
+        "parse)"))
     if (rootName.endsWith("_stream")) {
       // a `_stream` cursor root batched next to reads/aggregates
       // (r18): subscription-only, like the one-root surface — a
@@ -1728,9 +1756,12 @@ object GraphQl {
     * table itself. The count arm serves Hasura's argument forms
     * (`count`, `count(columns: c)`, `count(columns: c, distinct:
     * true)`); the field family (sum/min/max/avg/stddev/variance) is
-    * the shared relationship grammar. Operation variables work as in
-    * [[parse]]; the `subscription` keyword is accepted (a live
-    * aggregate re-evaluates per trigger). Never throws.
+    * the shared relationship grammar. The header, variable and
+    * fragment rules are [[parse]]'s (the shared [[document]] pass):
+    * `query` or `subscription` (a live aggregate re-evaluates per
+    * trigger) or the shorthand; a multi-operation document needs an
+    * operationName, which this surface does not take. The one root may
+    * be aliased. Never throws.
     *
     * Conditional exclusion composes with the AGGREGATE surface's own
     * shape rules: a document whose `aggregate` arm is fully excluded
@@ -1740,54 +1771,13 @@ object GraphQl {
     * contract speaking, not a directive error. */
   def parseRootAggregate(query: String, variables: String = "{}")
       : Either[String, QueryBuilder.AggRequest] =
-    try {
-      val vars = jsonVars(variables)
-      val (opToks, frags) = extractFragments(tokenize(query))
-      val p = new P(opToks)
-      p.fragments = frags
-      p.peek match {
-        case Name("query" | "subscription", _) =>
-          p.next()
-          p.peek match { case Name(_, _) => p.next(); case _ => () }
-          parseOpVariables(p, vars)
-        case _ =>
-          vars.keySet.toSeq.sorted.headOption.foreach(k =>
-            bad(s"variables.$k bound but not declared by the operation"))
-      }
-      p.expect('{')
-      val root = p.name("root aggregate field")
-      if (!root.endsWith("_aggregate"))
-        bad(s"$root: expected <table>_aggregate " +
-          "(plain reads go through parse)")
-      val table = root.stripSuffix("_aggregate")
-      val (rootKept, req) = parseAggRootField(p, root, table)
-      p.expect('}')
-      p.peek match {
-        case Eof(_) => ()
-        case t => bad(s"trailing content at ${t.pos}")
-      }
-      (p.variables.keySet -- p.used).toSeq.sorted.headOption.foreach(k =>
-        bad(s"variable $$$k declared and bound but never used — " +
-          "a dropped filter returns wrong rows silently"))
-      checkFragmentsUsed(p, opToks, nOps = 1)
-      if (!rootKept)
-        bad(s"$root: the only root field is excluded by its " +
-          "directives — nothing to serve (parseRoots drops excluded " +
-          "roots)")
-      Right(req)
-    } catch {
-      case Bad(m) => Left(m)
-      case e: NumberFormatException => Left(s"bad number: ${e.getMessage}")
-      case e: IllegalArgumentException => Left(e.getMessage)
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        Left(s"variables: not valid JSON: ${e.getOriginalMessage}")
-    }
-
+    oneRoot(query, variables, None, readOps, fixtureSchema,
+      Some("_aggregate")) { case (_, AggRoot(req)) => req }
 
   /** Parse ONE `<table>_aggregate` ROOT field's arguments + body into
-    * (kept, AggRequest) — shared by [[parseRootAggregate]] (exactly
-    * one root) and [[parseRootField]] (aggregate roots batched next
-    * to reads in a multi-root document). Root @include/@skip gate the
+    * (kept, AggRequest), for [[parseRootField]] — the one-root
+    * [[parseRootAggregate]] and aggregate roots batched next to reads
+    * in a multi-root document alike. Root @include/@skip gate the
     * field; it still fully compiles. */
   private def parseAggRootField(p: P, root: String, table: String)
       : (Boolean, QueryBuilder.AggRequest) = {
@@ -1886,71 +1876,27 @@ object GraphQl {
     * loudly (the engine, like Hasura, streams on one cursor column).
     * `initial_value: null` streams from the beginning; `ordering`
     * defaults ASC. The surface is subscription-only (Hasura serves
-    * `_stream` on no other operation type). Scalar selections ride
-    * the cursor scan directly; RELATIONSHIP selections (r17) compile
-    * like a read's and attach per delivered page through
-    * QueryBuilder.runOn. Operation variables work as in [[parse]]
-    * ($v at any value position). Never throws. */
+    * `_stream` on no other operation type): a `query` operation or
+    * the shorthand is refused, a mutation is refused by name, and a
+    * tabbed document selects its subscription by operationName. Scalar
+    * selections ride the cursor scan directly; RELATIONSHIP selections
+    * (r17) compile like a read's and attach per delivered page through
+    * QueryBuilder.runOn. Variable and fragment rules are [[parse]]'s
+    * (the shared [[document]] pass); the one root may be aliased.
+    * Never throws. */
   def parseStream(query: String, schema: Schema = fixtureSchema,
       variables: String = "{}",
       operationName: Option[String] = None)
       : Either[String, Subscriptions.StreamRequest] =
-    try {
-      val vars = jsonVars(variables)
-      val (allToks, frags) = extractFragments(tokenize(query))
-      // the parse()/parseMutationFields multi-operation contract,
-      // completed for the third grammar: a tabbed document selects
-      // its subscription by operationName, wrong-kind picks diagnose
-      val (opToks, nOps) = chooseOperation(allToks, operationName)
-      val p = new P(opToks)
-      p.fragments = frags
-      p.peek match {
-        case Name("subscription", _) =>
-          p.next()
-          p.peek match { case Name(_, _) => p.next(); case _ => () }
-          parseOpVariables(p, vars, multiOp = nOps > 1)
-        case Name("query" | "mutation", _) =>
-          bad("<table>_stream is a subscription-only surface " +
-            "(Hasura serves it over no other operation type)")
-        case t =>
-          bad(s"${t.pos}: expected 'subscription'")
-      }
-      p.expect('{')
-      val root = p.name("root stream field")
-      if (!root.endsWith("_stream"))
-        bad(s"$root: expected <table>_stream (plain reads go " +
-          "through parse)")
-      val (kept, sr) = compileStreamField(p, schema, root)
-      p.expect('}')
-      p.peek match {
-        case Eof(_) => ()
-        case t => bad(s"trailing content at ${t.pos}")
-      }
-      (p.variables.keySet -- p.used).toSeq.sorted.headOption.foreach(k =>
-        bad(s"variable $$$k declared and bound but never used — " +
-          "a dropped filter returns wrong rows silently"))
-      checkFragmentsUsed(p, allToks, nOps)
-      // the one-root stream API answers ONE page stream: a document
-      // whose only root is directive-excluded has nothing to serve
-      // (parseRoots drops excluded roots in a batch)
-      if (!kept)
-        bad(s"$root: the only root field is excluded by its " +
-          "directives — nothing to serve")
-      Right(sr)
-    } catch {
-      case Bad(m) => Left(m)
-      case e: NumberFormatException => Left(s"bad number: ${e.getMessage}")
-      case e: IllegalArgumentException => Left(e.getMessage)
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        Left(s"variables: not valid JSON: ${e.getOriginalMessage}")
-    }
+    oneRoot(query, variables, operationName, Set("subscription"), schema,
+      Some("_stream")) { case (_, StreamRoot(sr)) => sr }
 
   /** Compile ONE `<table>_stream` field — arguments (cursor /
     * batch_size / where), root directives, and the selection body —
-    * with the parser positioned just past the field name. Shared by
-    * [[parseStream]] (the one-root subscription document) and
-    * [[parseRootField]] (a `_stream` root batched into a multi-root
-    * subscription, r18). Returns (kept, request): an
+    * with the parser positioned just past the field name, for
+    * [[parseRootField]]: the one-root [[parseStream]] document and a
+    * `_stream` root batched into a multi-root subscription (r18)
+    * alike. Returns (kept, request): an
     * `@include`/`@skip`-excluded field still fully COMPILES (the
     * conditionalKeep contract — malformed cursors surface at parse,
     * not when the flag flips in production). */
@@ -2903,26 +2849,13 @@ object GraphQl {
   def parseMutationFields(doc: String, variables: String = "{}",
       schema: Schema = fixtureSchema,
       operationName: Option[String] = None)
-      : Either[String, Seq[Mutations.Field]] =
-    try {
-      val vars = jsonVars(variables)
-      val (allToks, frags) = extractFragments(tokenize(doc))
-      // the mirror of parse()'s multi-operation handling: a GraphiQL
-      // tab holding queries AND mutations selects the mutation by
-      // operationName; choosing a read operation here is diagnosed as
-      // such, the way parse() diagnoses a chosen mutation
-      val (opToks, nOps) = chooseOperation(allToks, operationName)
-      val p = new P(opToks)
-      p.fragments = frags
-      p.peek match {
-        case Name("mutation", _) =>
-          p.next()
-          p.peek match { case Name(_, _) => p.next(); case _ => () }
-          parseOpVariables(p, vars, multiOp = nOps > 1)
-        case t => bad(s"expected 'mutation' at ${t.pos} (read queries " +
-          "go through parse)")
-      }
-      p.expect('{')
+      : Either[String, Seq[Mutations.Field]] = guarded {
+    // the mirror of parse()'s multi-operation handling: a GraphiQL
+    // tab holding queries AND mutations selects the mutation by
+    // operationName; choosing a read operation here is diagnosed as
+    // such, the way parse() diagnoses a chosen mutation
+    val (ms, parsedFields) = document(doc, Some(variables), operationName,
+        Set("mutation")) { (p, _) =>
       val out = Seq.newBuilder[Mutations.Field]
       // spec §5.3.2 on mutation roots: response keys (alias or verb
       // name) must be unique — identical repeats collapse and execute
@@ -3082,29 +3015,15 @@ object GraphQl {
           }
         }
       }
-      p.expect('}')
-      p.peek match {
-        case Eof(_) => ()
-        case t => bad(s"trailing content at ${t.pos}")
-      }
-      (p.variables.keySet -- p.used).toSeq.sorted.headOption.foreach(k =>
-        bad(s"variable $$$k declared and bound but never used — " +
-          "a dropped predicate writes the wrong rows silently"))
-      checkFragmentsUsed(p, allToks, nOps)
-      val ms = out.result()
-      // a document with no fields AT ALL is malformed; one whose every
-      // field was conditionally excluded is a valid NO-OP (the dry-run
-      // toggle: GraphQL's fully-skipped selection answers empty data,
-      // never an error)
-      if (parsedFields == 0) bad("mutation document has no mutation fields")
-      Right(ms)
-    } catch {
-      case Bad(m) => Left(m)
-      case e: NumberFormatException => Left(s"bad number: ${e.getMessage}")
-      case e: IllegalArgumentException => Left(e.getMessage)
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        Left(s"variables: not valid JSON: ${e.getOriginalMessage}")
+      (out.result(), parsedFields)
     }
+    // a document with no fields AT ALL is malformed; one whose every
+    // field was conditionally excluded is a valid NO-OP (the dry-run
+    // toggle: GraphQL's fully-skipped selection answers empty data,
+    // never an error)
+    if (parsedFields == 0) bad("mutation document has no mutation fields")
+    ms
+  }
 
   // ---- mutation printer ----------------------------------------------
 
@@ -4777,8 +4696,18 @@ object GraphQl {
   private final case class ISel(alias: String, iname: String,
       args: Map[String, V], children: Seq[ISel])
 
-  private def parseIntroSels(p: P): Seq[ISel] = {
+  /** A braced introspection selection set. */
+  private def introBlock(p: P): Seq[ISel] = {
     p.expect('{')
+    val sels = parseIntroSels(p)
+    p.expect('}')
+    sels
+  }
+
+  /** The selections of one introspection selection set, up to (not
+    * past) its closing brace — the operation's own set is the
+    * [[document]] body. */
+  private def parseIntroSels(p: P): Seq[ISel] = {
     val out = Seq.newBuilder[ISel]
     while (!p.isPunct('}')) {
       if (p.isSpread) {
@@ -4790,7 +4719,7 @@ object GraphQl {
             // the condition rides the ISel tree as a '...' node — the
             // evaluator checks it against the STATIC meta type being
             // served (r17: conditions were previously spliced unchecked)
-            out += ISel(cond, "...", Map.empty, parseIntroSels(p))
+            out += ISel(cond, "...", Map.empty, introBlock(p))
           case Name(fname, fpos) =>
             p.next()
             val (cond, body) = p.fragments.getOrElse(fname,
@@ -4801,7 +4730,7 @@ object GraphQl {
             // fragment's OWN type condition, so the eval-side check
             // applies to both spread forms
             p.splice(Punct('{', fpos) +: body :+ Punct('}', fpos), pos)
-            out += ISel(cond, "...", Map.empty, parseIntroSels(p))
+            out += ISel(cond, "...", Map.empty, introBlock(p))
           case t => bad("introspection: expected a fragment name or " +
             s"'on' after '...' at ${t.pos}")
         }
@@ -4818,11 +4747,10 @@ object GraphQl {
         // declines at the operation header anyway
         parseDirectives(p)
         val kids =
-          if (p.isPunct('{')) parseIntroSels(p) else Seq.empty[ISel]
+          if (p.isPunct('{')) introBlock(p) else Seq.empty[ISel]
         out += ISel(alias, fname, args, kids)
       }
     }
-    p.expect('}')
     out.result()
   }
 
@@ -4835,64 +4763,50 @@ object GraphQl {
     * responses are DataFrames, not JSON — route those to [[parse]]).
     * Unknown meta-fields error with their position's field name, so a
     * client sees which selection the subset lacks instead of a
-    * silently absent key. */
+    * silently absent key. The document goes through the shared
+    * [[document]] pass like every read: a `query` operation or the
+    * shorthand (a mutation or subscription is refused), one operation
+    * per document (this surface takes no operationName), every
+    * fragment spread; it takes no operation variables, so declaring
+    * one is an error. The document parses before the meta schema is
+    * built. */
   def serveIntrospection(s: org.apache.spark.sql.SparkSession,
       dir: String, query: String, schema: Schema = fixtureSchema,
       tables: Seq[String] = graft.Tables.names,
       columns: Map[String, Set[String]] = Map.empty)
-      : Either[String, String] =
-    try {
-      val ms = metaSchema(s, dir, schema, tables, columns)
-      val (opToks, frags) = extractFragments(tokenize(query))
-      val p = new P(opToks)
-      p.fragments = frags
-      p.peek match {
-        case Name("query", _) =>
-          p.next()
-          p.peek match { case Name(_, _) => p.next(); case _ => () }
-          if (p.isPunct('('))
-            bad("operation variables are not supported in the " +
-              "introspection subset (the meta answer is static — " +
-              "inline the literals)")
-        case _ => ()
+      : Either[String, String] = guarded {
+    val roots = document(query, None, None, Set("query"))(
+      (p, _) => parseIntroSels(p))
+    val ms = metaSchema(s, dir, schema, tables, columns)
+    val data = mapper.createObjectNode()
+    onType(ms, "query_root", roots).foreach { sel =>
+      sel.iname match {
+        case "__typename" => data.put(sel.alias, "query_root")
+        case "__schema" =>
+          data.set[com.fasterxml.jackson.databind.node.ObjectNode](
+            sel.alias, evalSchema(ms, sel.children))
+        case "__type" =>
+          val tn = sel.args.get("name") match {
+            case Some(VLit(n: String)) => n
+            case _ => bad("__type: a literal `name` String argument " +
+              "is required")
+          }
+          ms.byName.get(tn) match {
+            case Some(t) => data.set[
+              com.fasterxml.jackson.databind.node.ObjectNode](
+                sel.alias, evalMetaType(ms, t, sel.children))
+            case None => data.putNull(sel.alias)
+          }
+        case other => bad(s"'$other' is not an introspection root " +
+          "field — data queries are served by parse/run, not as " +
+          "JSON")
       }
-      val roots = parseIntroSels(p)
-      p.peek match {
-        case Eof(_) => ()
-        case t => bad(s"unexpected trailing input at ${t.pos}")
-      }
-      val data = mapper.createObjectNode()
-      onType(ms, "query_root", roots).foreach { sel =>
-        sel.iname match {
-          case "__typename" => data.put(sel.alias, "query_root")
-          case "__schema" =>
-            data.set[com.fasterxml.jackson.databind.node.ObjectNode](
-              sel.alias, evalSchema(ms, sel.children))
-          case "__type" =>
-            val tn = sel.args.get("name") match {
-              case Some(VLit(n: String)) => n
-              case _ => bad("__type: a literal `name` String argument " +
-                "is required")
-            }
-            ms.byName.get(tn) match {
-              case Some(t) => data.set[
-                com.fasterxml.jackson.databind.node.ObjectNode](
-                  sel.alias, evalMetaType(ms, t, sel.children))
-              case None => data.putNull(sel.alias)
-            }
-          case other => bad(s"'$other' is not an introspection root " +
-            "field — data queries are served by parse/run, not as " +
-            "JSON")
-        }
-      }
-      val resp = mapper.createObjectNode()
-      resp.set[com.fasterxml.jackson.databind.node.ObjectNode](
-        "data", data)
-      Right(mapper.writeValueAsString(resp))
-    } catch {
-      case Bad(m) => Left(m)
-      case e: IllegalArgumentException => Left(e.getMessage)
     }
+    val resp = mapper.createObjectNode()
+    resp.set[com.fasterxml.jackson.databind.node.ObjectNode](
+      "data", data)
+    mapper.writeValueAsString(resp)
+  }
 
   private type JObj = com.fasterxml.jackson.databind.node.ObjectNode
 

@@ -2460,4 +2460,95 @@ class GraphQlSpec extends SparkSpec {
     val doc = GraphQl.render(req)
     assert(GraphQl.parse(doc) === Right(req))
   }
+
+  // ---- the shared document front end --------------------------------
+
+  /** One document entry point: the operation kind it serves, a valid
+    * root selection for it, and how to call it with a document and a
+    * variables map (`takesVars = false`: it has no variables
+    * parameter). */
+  private case class Entry(name: String, kind: String, sel: String,
+      run: (String, String) => Either[String, Any],
+      takesVars: Boolean = true)
+
+  private def entries: Seq[Entry] = Seq(
+    Entry("parse", "query", "region { r_regionkey }",
+      (d, v) => GraphQl.parse(d, variables = v)),
+    Entry("parseRoots", "query", "region { r_regionkey }",
+      (d, v) => GraphQl.parseRoots(d, variables = v)),
+    Entry("parseRootAggregate", "query",
+      "region_aggregate { aggregate { count } }",
+      (d, v) => GraphQl.parseRootAggregate(d, v)),
+    Entry("parseStream", "subscription",
+      "events_stream(cursor: {initial_value: {event_id: null}}, " +
+        "batch_size: 5) { event_id }",
+      (d, v) => GraphQl.parseStream(d, variables = v)),
+    Entry("parseMutationFields", "mutation", mutationSel,
+      (d, v) => GraphQl.parseMutationFields(d, v)),
+    Entry("serveIntrospection", "query", "__typename",
+      (d, _) => GraphQl.serveIntrospection(spark, sf("sf0.001"), d),
+      takesVars = false))
+
+  private val mutationSel =
+    "delete_region(where: {r_regionkey: {_eq: 1}}) { affected_rows }"
+
+  /** Document-level faults: a name, the faulty (document, variables)
+    * for an entry point (None where the fault cannot be spelled for
+    * it), and the message substring every entry point must answer. */
+  private val documentFaults
+      : Seq[(String, Entry => Option[(String, String)], String)] = Seq(
+    ("two operations with no operationName",
+      e => Some((s"${e.kind} A { ${e.sel} } ${e.kind} B { ${e.sel} }",
+        "{}")),
+      "operationName is required"),
+    ("a trailing second operation",
+      e => Some((s"${e.kind} A { ${e.sel} } { ${e.sel} }", "{}")),
+      "operationName is required"),
+    ("a bound but unused variable",
+      e => Option.when(e.takesVars)(
+        (s"${e.kind} A($$u: Int) { ${e.sel} }", """{"u": 1}""")),
+      "declared and bound but never used"),
+    ("an unused fragment",
+      e => Some((s"${e.kind} A { ${e.sel} } " +
+        "fragment Dead on region { r_regionkey }", "{}")),
+      "defined but never spread"),
+    ("malformed variables JSON",
+      e => Option.when(e.takesVars)(
+        (s"${e.kind} A { ${e.sel} }", """{"u": """)),
+      "not valid JSON"),
+    ("a mutation header sent to a read entry point",
+      e => Option.when(e.kind != "mutation")(
+        (s"mutation A { $mutationSel }", "{}")),
+      "is a mutation"))
+
+  test("every document entry point answers the same operation, " +
+      "variable, fragment and error rules") {
+    val wrong = for {
+      e <- entries
+      // the fault-free document serves, so each fault below is the
+      // only thing wrong with its document
+      _ = assert(e.run(s"${e.kind} A { ${e.sel} }", "{}").isRight,
+        s"${e.name}: the clean document")
+      (fault, build, want) <- documentFaults
+      (doc, vars) <- build(e)
+      got = e.run(doc, vars)
+      if !got.left.exists(_.contains(want))
+    } yield s"${e.name} / $fault: want '$want', got $got"
+    assert(wrong.isEmpty, wrong.mkString("\n", "\n", ""))
+  }
+
+  test("the one-root aggregate and stream surfaces accept an aliased " +
+      "root and answer the unaliased root's request") {
+    val agg = "region_aggregate(where: {r_regionkey: {_lte: 2}}) " +
+      "{ aggregate { count } }"
+    val plainAgg = GraphQl.parseRootAggregate(s"{ $agg }")
+    assert(plainAgg.isRight, plainAgg)
+    assert(GraphQl.parseRootAggregate(s"{ a: $agg }") === plainAgg)
+    val stream = "events_stream(cursor: {initial_value: {event_id: 1}}, " +
+      "batch_size: 2) { event_id }"
+    val plainStream = GraphQl.parseStream(s"subscription { $stream }")
+    assert(plainStream.isRight, plainStream)
+    assert(GraphQl.parseStream(s"subscription { s: $stream }") ===
+      plainStream)
+  }
 }

@@ -2,6 +2,7 @@ package graft.similarity
 
 import graft.SparkSpec
 import graft.functions.VectorFunctions
+import graft.sources.SidecarCache
 import org.apache.spark.sql.functions._
 
 class IvfIndexSpec extends SparkSpec {
@@ -80,7 +81,7 @@ class IvfIndexSpec extends SparkSpec {
     // so the equivalence pins the whole probe path
     val qn = { val n = math.sqrt(query.map(x => x * x).sum)
       query.map(_ / n).toSeq }
-    val probes = spark.read.parquet(s"$path/_centroids").collect()
+    val probes = SidecarCache.read(spark, s"$path/_centroids").collect()
       .map(r => r.getAs[Long]("cent_id") ->
         r.getAs[scala.collection.Seq[Double]]("cent")
           .lazyZip(qn).map(_ * _).sum)
@@ -224,7 +225,7 @@ class IvfIndexSpec extends SparkSpec {
     val (nBefore, nAfter) = IvfIndex.compact(spark, path)
     assert(nAfter <= nBefore)
     assert(hits() === before)
-    assert(spark.read.parquet(s"$path/_pq").count() === 1L)
+    assert(SidecarCache.read(spark, s"$path/_pq").count() === 1L)
   }
 
   test("k-means-trained index still finds the stored query vector") {
@@ -238,7 +239,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(rows.nonEmpty)
     assert(rows.head.getAs[Long]("vec_id") === 5L)
     // trained centroids are normalized and nCells-bounded
-    val cents = spark.read.parquet(s"$path/_centroids").collect()
+    val cents = SidecarCache.read(spark, s"$path/_centroids").collect()
     assert(cents.length <= 8 && cents.nonEmpty)
   }
 

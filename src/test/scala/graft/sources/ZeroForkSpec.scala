@@ -19,10 +19,24 @@ import org.apache.spark.sql.functions._
   * parquet, checkpoints, state and swap markers. */
 class ZeroForkSpec extends SparkSpec {
 
-  /** Commands of the child processes the JVM started while `body` ran.
-    * Spark's heartbeat thread is left out: once per JVM it forks
-    * `getconf PAGESIZE` for its process-tree metrics, at a time of its
-    * own, whatever the engine does. */
+  /** Spark's own forks, which come at a time of their own whatever the
+    * engine does, and are left out by command AND thread:
+    *  - `getconf` on a heartbeat thread (`driver-heartbeater` or
+    *    `executor-heartbeater`, whichever beats first): once per JVM,
+    *    for the process-tree metrics;
+    *  - `rm -rf` of one session's `artifacts-<id>/<session>` directory
+    *    on a JDK `Cleaner-<n>` thread: Spark's ArtifactManager
+    *    registers that cleanup for every session, so a garbage
+    *    collection that finds sessions cloned earlier (streaming
+    *    queries clone them) forks one per session. */
+  private def sparksOwn(command: String, thread: String): Boolean =
+    (thread == "driver-heartbeater" || thread == "executor-heartbeater") &&
+      command.startsWith("getconf ") ||
+    thread.startsWith("Cleaner-") &&
+      command.matches("""rm -rf \S*/artifacts-[^/\s]+/[^/\s]+""")
+
+  /** Commands of the child processes the JVM started while `body` ran,
+    * [[sparksOwn]] forks left out. */
   private def processStarts(body: => Unit): Seq[String] = {
     val rec = new jdk.jfr.Recording()
     rec.enable("jdk.ProcessStart")
@@ -34,8 +48,9 @@ class ZeroForkSpec extends SparkSpec {
       jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq
         .flatMap { e =>
           val thread = Option(e.getThread).map(_.getJavaName).orNull
-          if (thread == "driver-heartbeater") None
-          else Some(s"${e.getString("command")} ($thread)")
+          val command = e.getString("command")
+          if (thread != null && sparksOwn(command, thread)) None
+          else Some(s"$command ($thread)")
         }
     } finally {
       rec.close()
