@@ -1760,8 +1760,7 @@ object GraphQl {
     * fragment rules are [[parse]]'s (the shared [[document]] pass):
     * `query` or `subscription` (a live aggregate re-evaluates per
     * trigger) or the shorthand; a multi-operation document needs an
-    * operationName, which this surface does not take. The one root may
-    * be aliased. Never throws.
+    * operationName. The one root may be aliased. Never throws.
     *
     * Conditional exclusion composes with the AGGREGATE surface's own
     * shape rules: a document whose `aggregate` arm is fully excluded
@@ -1769,9 +1768,10 @@ object GraphQl {
     * refuses BY DESIGN (nodes without aggregates is the plain read's
     * job — RootAggregateSpec pins it) — that Left is the aggregate
     * contract speaking, not a directive error. */
-  def parseRootAggregate(query: String, variables: String = "{}")
+  def parseRootAggregate(query: String, variables: String = "{}",
+      operationName: Option[String] = None)
       : Either[String, QueryBuilder.AggRequest] =
-    oneRoot(query, variables, None, readOps, fixtureSchema,
+    oneRoot(query, variables, operationName, readOps, fixtureSchema,
       Some("_aggregate")) { case (_, AggRoot(req)) => req }
 
   /** Parse ONE `<table>_aggregate` ROOT field's arguments + body into
@@ -4765,17 +4765,18 @@ object GraphQl {
     * client sees which selection the subset lacks instead of a
     * silently absent key. The document goes through the shared
     * [[document]] pass like every read: a `query` operation or the
-    * shorthand (a mutation or subscription is refused), one operation
-    * per document (this surface takes no operationName), every
+    * shorthand (a mutation or subscription is refused), an
+    * operationName choosing among several operations, every
     * fragment spread; it takes no operation variables, so declaring
     * one is an error. The document parses before the meta schema is
     * built. */
   def serveIntrospection(s: org.apache.spark.sql.SparkSession,
       dir: String, query: String, schema: Schema = fixtureSchema,
       tables: Seq[String] = graft.Tables.names,
-      columns: Map[String, Set[String]] = Map.empty)
+      columns: Map[String, Set[String]] = Map.empty,
+      operationName: Option[String] = None)
       : Either[String, String] = guarded {
-    val roots = document(query, None, None, Set("query"))(
+    val roots = document(query, None, operationName, Set("query"))(
       (p, _) => parseIntroSels(p))
     val ms = metaSchema(s, dir, schema, tables, columns)
     val data = mapper.createObjectNode()

@@ -28,9 +28,12 @@ import graft.api.QueryBuilder._
   *
   * Scale posture: a row filter is just more predicate — it pushes into
   * the same scans the request already pays; the column check is
-  * driver-side request validation. Filters compose with decorrelation
-  * (a role filter containing a relationship predicate rides [[run]]'s
-  * machinery unchanged).
+  * driver-side request validation. This object only REWRITES
+  * requests: a role filter containing a relationship predicate stays
+  * in the secured where, and the executors holding the table
+  * directory decorrelate it ([[run]], [[QueryBuilder.runAggregate]],
+  * [[Subscriptions.streamPages]]/[[Subscriptions.streamServe]]) on
+  * every root kind, one-root or batched.
   */
 object Permissions {
 
@@ -127,6 +130,26 @@ object Permissions {
       secureWhere(x, role, policy, enclosing, enclosingTable).map(Not(_))
     case leaf => Right(leaf)
   }
+
+  /** The one grant step every where-carrying request level takes: the
+    * role's grant on `table`, then `cols` checked against its column
+    * allowlist (`what` names the surface in the denial; `cols` lists
+    * every column the level reads, its where's own columns included),
+    * then `where` secured inside ([[secureWhere]]) with the grant's
+    * row filter ANDed in. Relationship predicates stay in the answer:
+    * the executors holding the table directory evaluate them. */
+  private def scope(role: String, policy: Policy, table: String,
+      cols: Seq[String], where: Option[BoolExp], what: String)
+      : Either[String, Option[BoolExp]] =
+    for {
+      perm <- policy.get(role, table)
+      _ <- checkCols(cols, perm, role, table, what)
+      w2 <- where match {
+        case Some(w) =>
+          secureWhere(w, role, policy, perm, table).map(Some(_))
+        case None => Right(None)
+      }
+    } yield andWith(perm.filter, w2)
 
   /** Evaluate a filter against a LITERAL row (the insert check
     * clause): SQL three-valued logic collapses unknown to false (an
@@ -227,7 +250,6 @@ object Permissions {
   def secure(req: Request, role: String,
       policy: Policy): Either[String, Request] =
     for {
-      perm <- policy.get(role, req.table)
       // __typename (a constant type-name answer, reads no column) is
       // exempt HERE — the run/runRoot read path serves it as a
       // literal. The exemption is deliberately scoped to the read
@@ -236,7 +258,8 @@ object Permissions {
       // instead of an unresolved-column crash at execution
       // column grants are about SOURCE columns — an alias must not
       // smuggle a denied column out under a permitted response key
-      _ <- checkCols(req.fields.map(f => req.fieldAs.getOrElse(f, f))
+      where2 <- scope(role, policy, req.table,
+        req.fields.map(f => req.fieldAs.getOrElse(f, f))
           .filterNot(_ == "__typename") ++
         req.distinctOn ++
         req.orderBy.map(_.field)
@@ -245,41 +268,23 @@ object Permissions {
         // every parent-side join key is a column of THIS table
         req.nested.map(_.parentKey) ++ req.aggRels.map(_.parentKey) ++
         req.orderAggs.map(_.parentKey),
-        perm, role, req.table, "select")
-      where2 <- req.where match {
-        case Some(w) =>
-          secureWhere(w, role, policy, perm, req.table).map(Some(_))
-        case None => Right(None)
-      }
+        req.where, "select")
       nested2 <- sequence(req.nested.map(secureNested(_, role, policy)))
       aggRels2 <- sequence(req.aggRels.map(secureAggRel(_, role, policy)))
-      orderAggs2 <- sequence(req.orderAggs.map { oa =>
-        policy.get(role, oa.table).flatMap { p =>
-          // the CHILD-side surface grant-checks like secureNested's:
-          // the aggregated column, the join key, AND the caller's
-          // where columns — ungranted, any of them turns row ORDER
-          // into an oracle over denied data; the where tree also
-          // secures recursively (RelPreds inside it grant-check
-          // their tables), never rides through unchecked
-          checkCols(aggCols(oa.agg) ++
-              oa.where.toSeq.flatMap(whereCols) :+ oa.childKey,
-            p, role, oa.table, "ordering aggregate").flatMap { _ =>
-            (oa.where match {
-              case Some(w) =>
-                secureWhere(w, role, policy, p, oa.table).map(Some(_))
-              case None => Right(None)
-            }).map { w2 =>
-              // the ordering value must aggregate only VISIBLE child
-              // rows — a row-filtered grant threads into the hidden
-              // aggregate's child filter (Hasura computes the
-              // ordering aggregate over the rows the role can see),
-              // the q174/q184 decorrelation discipline
-              oa.copy(where = andWith(p.filter, w2))
-            }
-          }
-        }
-      })
-    } yield req.copy(where = andWith(perm.filter, where2),
+      // the CHILD-side surface grant-checks like secureNested's: the
+      // aggregated column, the join key, AND the caller's where
+      // columns — ungranted, any of them turns row ORDER into an
+      // oracle over denied data; the where tree also secures
+      // recursively (RelPreds inside it grant-check their tables).
+      // The ordering value aggregates only VISIBLE child rows: the
+      // grant's row filter threads into the hidden aggregate's child
+      // filter (Hasura computes the ordering aggregate over the rows
+      // the role can see)
+      orderAggs2 <- sequence(req.orderAggs.map(oa =>
+        scope(role, policy, oa.table, aggCols(oa.agg) ++
+            oa.where.toSeq.flatMap(whereCols) :+ oa.childKey,
+          oa.where, "ordering aggregate").map(w => oa.copy(where = w))))
+    } yield req.copy(where = where2,
       nested = nested2, aggRels = aggRels2, orderAggs = orderAggs2)
 
   private def aggCols(a: AggField): Seq[String] = a match {
@@ -297,24 +302,18 @@ object Permissions {
   private def secureNested(n: Nested, role: String,
       policy: Policy): Either[String, Nested] =
     for {
-      perm <- policy.get(role, n.table)
       // same scoped __typename exemption as secure(): compileNested
       // serves it as a literal
-      _ <- checkCols(
+      where2 <- scope(role, policy, n.table,
         n.fields.map(_.field).filterNot(_ == "__typename") ++
         n.distinctOn ++
         n.orderBy.map(_.field) ++ n.where.toSeq.flatMap(whereCols) ++
         n.subs.map(_.parentKey) :+ n.childKey,
-        perm, role, n.table, "relationship select")
-      where2 <- n.where match {
-        case Some(w) =>
-          secureWhere(w, role, policy, perm, n.table).map(Some(_))
-        case None => Right(None)
-      }
+        n.where, "relationship select")
       // every sibling secures independently — one denied sub denies
       // the document (fail-closed, as for the single-sub chain)
       subs2 <- secureNestedSeq(n.subs, role, policy)
-    } yield n.copy(where = andWith(perm.filter, where2), subs = subs2)
+    } yield n.copy(where = where2, subs = subs2)
 
   /** Secure every relationship in order, fail-closed: one denial
     * denies the whole sequence. Shared by nested siblings and stream
@@ -328,19 +327,11 @@ object Permissions {
 
   private def secureAggRel(a: AggRel, role: String,
       policy: Policy): Either[String, AggRel] =
-    for {
-      perm <- policy.get(role, a.table)
-      _ <- checkCols(a.aggs.flatMap(aggCols) ++ a.nodes ++
-        a.distinctOn ++
-        a.orderBy.map(_.field) ++ a.where.toSeq.flatMap(whereCols) :+
-        a.childKey,
-        perm, role, a.table, "aggregate relationship")
-      where2 <- a.where match {
-        case Some(w) =>
-          secureWhere(w, role, policy, perm, a.table).map(Some(_))
-        case None => Right(None)
-      }
-    } yield a.copy(where = andWith(perm.filter, where2))
+    scope(role, policy, a.table, a.aggs.flatMap(aggCols) ++ a.nodes ++
+      a.distinctOn ++
+      a.orderBy.map(_.field) ++ a.where.toSeq.flatMap(whereCols) :+
+      a.childKey,
+      a.where, "aggregate relationship").map(w => a.copy(where = w))
 
   /** q140's policy — the README's "grant select on part of the
     * schema" scenario as metadata: the analyst sees only BUILDING
@@ -414,7 +405,8 @@ object Permissions {
   def serveIntrospectionAs(s: org.apache.spark.sql.SparkSession,
       dir: String, role: String, policy: Policy, query: String,
       schema: GraphQl.Schema = GraphQl.fixtureSchema,
-      tables: Seq[String] = graft.Tables.names)
+      tables: Seq[String] = graft.Tables.names,
+      operationName: Option[String] = None)
       : Either[String, String] = {
     val granted = tables
       .flatMap(t => policy.get(role, t).toOption.map(t -> _)).toMap
@@ -438,7 +430,8 @@ object Permissions {
     val columns2 = granted.collect {
       case (t, perm) if perm.columns.isDefined => t -> perm.columns.get
     }
-    GraphQl.serveIntrospection(s, dir, query, schema2, tables2, columns2)
+    GraphQl.serveIntrospection(s, dir, query, schema2, tables2, columns2,
+      operationName)
   }
 
   /** [[serveAggregateAs]] for aggregate documents arriving as TEXT —
@@ -449,10 +442,11 @@ object Permissions {
     * decorrelate), and serves. Parse errors and denials are Left. */
   def serveAggregateTextAs(s: org.apache.spark.sql.SparkSession,
       dir: String, role: String, policy: Policy, doc: String,
-      variables: String = "{}")
+      variables: String = "{}",
+      operationName: Option[String] = None)
       : Either[String, org.apache.spark.sql.DataFrame] =
     for {
-      req <- GraphQl.parseRootAggregate(doc, variables)
+      req <- GraphQl.parseRootAggregate(doc, variables, operationName)
       df <- serveAggregateAs(s, dir, role, policy, req)
     } yield df
 
@@ -472,9 +466,9 @@ object Permissions {
         identity))
 
   /** q174 — an aggregate served under a role whose row filter carries
-    * a RELATIONSHIP predicate ([[serveAggregateAs]] — the surface
-    * [[secureAggregate]]'s row-local guard denies): the auditor sees
-    * only customers WITH an open order, the request narrows to
+    * a RELATIONSHIP predicate ([[serveAggregateAs]]; the predicate
+    * decorrelates inside [[QueryBuilder.runAggregate]]): the auditor
+    * sees only customers WITH an open order, the request narrows to
     * BUILDING, and the count/sum fold over the decorrelated visible
     * set. The oracle inlines both as native EXISTS + equality — an
     * engine aggregating unfiltered rows (or decorrelating wrongly)
@@ -647,53 +641,23 @@ object Permissions {
           secure(r, role, policy)
             .map(sr => ss :+ (k -> GraphQl.ByPkRoot(sr))))
         // a batched `_stream` root secures like the one-root stream
-        // surface; a RelPred row grant denies here the same way
-        // (the dedicated serveStreamAs overloads serve those roles)
+        // surface; runRoots' executors evaluate RelPred row grants on
+        // every root kind, as the one-root serves do
         case (acc, (k, GraphQl.StreamRoot(sr0))) => acc.flatMap(ss =>
           secureStream(sr0, role, policy)
             .map(sr => ss :+ (k -> GraphQl.StreamRoot(sr))))
       }
     } yield GraphQl.runRoots(s, dir, secured)
 
-  /** [[serveAs]] for STREAMING subscription documents: parse the
-    * `<table>_stream` text, secure it for the role, and serve the
-    * BATCH-replay pages over `base` — the live path takes the same
-    * secured request into `Subscriptions.streamServe`, so one
-    * secure() covers both. Denials and parse errors are Left values.
-    *
-    * This overload takes an ALREADY-LOADED base and so cannot build
-    * relationship key sets: a role whose row filter carries a
-    * RELATIONSHIP predicate is denied HERE (a clean Left, never a
-    * first-trigger crash) — the (s, dir) overload and
-    * [[serveStreamLiveAs]] SERVE such roles by decorrelating the
-    * satisfying-key set per serve, Hasura's grant surface. */
-  def serveStreamAs(base: org.apache.spark.sql.DataFrame, role: String,
-      policy: Policy, doc: String, nPages: Int,
-      schema: GraphQl.Schema = GraphQl.fixtureSchema,
-      variables: String = "{}")
-      : Either[String, org.apache.spark.sql.DataFrame] =
-    for {
-      sr <- GraphQl.parseStream(doc, schema, variables)
-      sec <- secureStream(sr, role, policy)
-      // relationship selections load child tables from the table
-      // directory this overload does not have — a clean Left, never
-      // a serve-time crash (the (s, dir) overload serves them)
-      _ <- if (sec.nested.nonEmpty)
-        Left(s"${sec.table}_stream: relationship selections need " +
-          "the table directory — use the (s, dir) serveStreamAs " +
-          "overload")
-      else Right(())
-    } yield Subscriptions.streamPages(base, sec, nPages)
-
   /** q184 — a `_stream` subscription served under a role whose row
-    * filter carries a RELATIONSHIP predicate (the surface
-    * [[secureStream]]'s row-local guard denies): the auditor sees
-    * only events whose user is a BUILDING customer, decorrelated to a
-    * pinned key set + flag join per serve, then the q145-style cursor
-    * replay pages the visible rows. The oracle inlines the grant as a
-    * native EXISTS inside the same row_number paging — an engine
-    * streaming unfiltered rows (or paging before filtering)
-    * hash-fails on row placement. */
+    * filter carries a RELATIONSHIP predicate ([[serveStreamAs]]; the
+    * predicate decorrelates inside [[Subscriptions.streamPages]]): the
+    * auditor sees only events whose user is a BUILDING customer,
+    * decorrelated to a pinned key set + flag join per serve, then the
+    * q145-style cursor replay pages the visible rows. The oracle
+    * inlines the grant as a native EXISTS inside the same row_number
+    * paging — an engine streaming unfiltered rows (or paging before
+    * filtering) hash-fails on row placement. */
   def q184StreamRelFilter(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val pol = Policy(Map(
@@ -710,18 +674,18 @@ object Permissions {
         |    event_id user_id value
         |  }
         |}""".stripMargin
-    serveStreamAs(s, dir, "auditor", pol, doc, nPages = 3,
-      GraphQl.fixtureSchema, "{}", None).fold(
+    serveStreamAs(s, dir, "auditor", pol, doc, nPages = 3).fold(
       m => throw new IllegalStateException(s"q184 denied: $m"),
       identity)
   }
 
   /** q193 — q184's LIVE twin under the oracle gate: the SAME
     * RelPred-filtered role serves through [[serveStreamLiveAs]]'s
-    * actual streaming fold ([[Subscriptions.streamServe]] — cursor
-    * advance, dedup, page cut), fed a deterministic bounded replay
-    * (the first 200 post-cursor click events, one trigger, so the
-    * live page numbering equals the oracle's flat row_number cut).
+    * actual streaming fold ([[Subscriptions.streamServe]] — key-set
+    * flag join at attach, cursor advance, dedup, page cut), fed a
+    * deterministic bounded replay (the first 200 post-cursor click
+    * events, one trigger, so the live page numbering equals the
+    * oracle's flat row_number cut).
     * q184 pins the batch-replay serve path; this pins the one serving
     * path the gate couldn't see — an engine whose LIVE fold filters
     * after paging, drops the key-set flag join, or mis-numbers pages
@@ -824,179 +788,75 @@ object Permissions {
   /** Secure a ROOT-AGGREGATE request: the role's row filter ANDs into
     * the where (an unfiltered count/sum over invisible rows would
     * LEAK them as numbers), and every referenced column — aggregated,
-    * nodes, ordering, filtering — must be granted. */
-  /** Grant checks + filter merge for an aggregate request, WITHOUT
-    * the row-local guard — shared by [[secureAggregate]] (which adds
-    * it, for runAggregate callers) and [[serveAggregateAs]] (which
-    * decorrelates relationship predicates instead). */
-  private def mergedAggregate(r: QueryBuilder.AggRequest, role: String,
-      policy: Policy): Either[String, QueryBuilder.AggRequest] =
-    for {
-      perm <- policy.get(role, r.table)
-      _ <- checkCols(r.aggs.flatMap(aggCols) ++ r.nodes ++
-        r.orderBy.map(_.field) ++ r.where.toSeq.flatMap(whereCols),
-        perm, role, r.table, "aggregate request")
-      w2 <- r.where match {
-        case Some(w) =>
-          secureWhere(w, role, policy, perm, r.table).map(Some(_))
-        case None => Right(None)
-      }
-    } yield r.copy(where = andWith(perm.filter, w2))
-
+    * nodes, ordering, filtering — must be granted. A relationship
+    * predicate in the secured where (the role's or the request's) is
+    * [[QueryBuilder.runAggregate]]'s to decorrelate. */
   def secureAggregate(r: QueryBuilder.AggRequest, role: String,
       policy: Policy): Either[String, QueryBuilder.AggRequest] =
-    for {
-      m <- mergedAggregate(r, role, policy)
-      // runAggregate applies the where via toColumn — a relationship
-      // predicate (legal in role filters for the run() path, which
-      // decorrelates) has no row-local form there: deny HERE, not as
-      // a first-execution crash. [[serveAggregateAs]] serves these.
-      _ <- if (m.where.exists(QueryBuilder.hasRelPred))
-        Left(s"role '$role': the effective aggregate filter carries " +
-          "a relationship predicate — not servable by runAggregate " +
-          "(serveAggregateAs decorrelates it)")
-      else Right(())
-    } yield m
+    scope(role, policy, r.table, r.aggs.flatMap(aggCols) ++ r.nodes ++
+      r.orderBy.map(_.field) ++ r.where.toSeq.flatMap(whereCols),
+      r.where, "aggregate request").map(w => r.copy(where = w))
 
   /** Serve a root-aggregate request AS a role — the [[serveAs]] loop
-    * for the `<table>_aggregate` surface, CLOSING the capability gap
-    * [[secureAggregate]]'s row-local guard left: a role filter (or
-    * request where) carrying RELATIONSHIP predicates decorrelates
-    * exactly like run() — each EXISTS becomes a distinct-satisfying-
-    * child-keys build + one left-join flag — so Hasura's
-    * filter-with-relationship grants serve aggregates here too. The
-    * visible row set materializes per serve (the key-set joins are
-    * AQE-broadcastable; nothing driver-sized), then the aggregate
-    * folds over it row-locally. */
+    * for the `<table>_aggregate` surface: [[secureAggregate]], then
+    * [[QueryBuilder.runAggregate]] over the table directory, which
+    * decorrelates relationship predicates exactly like run() (each
+    * EXISTS becomes a distinct-satisfying-child-keys build + one
+    * left-join flag), so Hasura's filter-with-relationship grants
+    * serve aggregates too. */
   def serveAggregateAs(s: org.apache.spark.sql.SparkSession,
       dir: String, role: String, policy: Policy,
       r: QueryBuilder.AggRequest)
       : Either[String, org.apache.spark.sql.DataFrame] =
-    mergedAggregate(r, role, policy).map { m =>
-      val base = graft.Tables.load(s, dir, m.table)
-      m.where match {
-        case Some(w) if QueryBuilder.hasRelPred(w) =>
-          val (df, w2) = QueryBuilder.decorrelate(s, dir, base, w,
-            new java.util.concurrent.atomic.AtomicInteger())
-          // flag columns served their filter — the aggregate sees the
-          // base schema only
-          val visible = df.filter(w2.toColumn)
-            .select(base.columns.map(org.apache.spark.sql
-              .functions.col).toSeq: _*)
-          QueryBuilder.runAggregateOn(visible, m.copy(where = None))
-        case _ => QueryBuilder.runAggregateOn(base, m)
-      }
-    }
-
-  /** Grant checks + filter merge for a stream subscription, WITHOUT
-    * the row-local guard — shared by [[secureStream]] (which adds it,
-    * for callers driving the executors directly) and the
-    * (s, dir) [[serveStreamAs]]/[[serveStreamLiveAs]] overloads
-    * (which decorrelate relationship predicates instead). */
-  private def mergedStream(sr: Subscriptions.StreamRequest, role: String,
-      policy: Policy): Either[String, Subscriptions.StreamRequest] =
-    for {
-      perm <- policy.get(role, sr.table)
-      _ <- checkCols(sr.fields.map(f => sr.fieldAs.getOrElse(f, f)) ++
-        sr.cursorFields ++
-        sr.nested.map(_.parentKey) ++
-        sr.where.toSeq.flatMap(whereCols),
-        perm, role, sr.table, "stream subscription")
-      w2 <- sr.where match {
-        case Some(w) =>
-          secureWhere(w, role, policy, perm, sr.table).map(Some(_))
-        case None => Right(None)
-      }
-      // relationship selections secure like a read's (the secureNested
-      // contract): every level gains its grant's filter, a denied
-      // level denies the subscription
-      nested2 <- secureNestedSeq(sr.nested, role, policy)
-    } yield sr.copy(where = andWith(perm.filter, w2), nested = nested2)
+    secureAggregate(r, role, policy).map(QueryBuilder.runAggregate(s, dir, _))
 
   /** Secure a STREAMING subscription: the filter ANDs into the cursor
     * scan (compiled predicates reach the streaming source), and the
     * selected fields AND the cursor column must be granted — a
     * cursor on an ungranted column would leak its values through
-    * page boundaries. */
+    * page boundaries. A relationship predicate in the secured where
+    * is for the stream executors' table directory to decorrelate
+    * ([[Subscriptions.streamPages]]/[[Subscriptions.streamServe]]
+    * with `rel`). */
   def secureStream(sr: Subscriptions.StreamRequest, role: String,
       policy: Policy): Either[String, Subscriptions.StreamRequest] =
     for {
-      m <- mergedStream(sr, role, policy)
-      // same guard as secureAggregate: the stream executors evaluate
-      // the where row-locally — a relationship predicate would kill
-      // the streaming query at its first trigger instead. The
-      // (s, dir) serveStreamAs/serveStreamLiveAs overloads SERVE such
-      // roles by decorrelating the key set per serve.
-      _ <- if (m.where.exists(QueryBuilder.hasRelPred))
-        Left(s"role '$role': the effective stream filter carries a " +
-          "relationship predicate — not servable row-locally over a " +
-          "cursor scan (the (s, dir) serveStreamAs overload " +
-          "decorrelates it)")
-      else Right(())
-    } yield m
+      w2 <- scope(role, policy, sr.table,
+        sr.fields.map(f => sr.fieldAs.getOrElse(f, f)) ++
+        sr.cursorFields ++
+        sr.nested.map(_.parentKey) ++
+        sr.where.toSeq.flatMap(whereCols),
+        sr.where, "stream subscription")
+      // relationship selections secure like a read's (the secureNested
+      // contract): every level gains its grant's filter, a denied
+      // level denies the subscription
+      nested2 <- secureNestedSeq(sr.nested, role, policy)
+    } yield sr.copy(where = w2, nested = nested2)
 
-  /** Decorrelate a stream filter's RELATIONSHIP predicates at SERVE
-    * time — the q174 aggregate machinery applied to the stream
-    * surface: each RelPred materializes its DISTINCT satisfying
-    * parent-key set once, PINNED for the life of the serve
-    * (localCheckpoint — the documented staleness contract: child rows
-    * arriving after the serve starts do not flip visibility
-    * mid-stream, matching the cursor scan's own no-retraction
-    * semantics; re-subscribe to refresh), and the base left-joins it
-    * as a flag column the rewritten where reads row-locally — a
-    * stream-static join each trigger pays on the already-filtered
-    * delta, never a per-trigger child-table re-aggregation.
-    *
-    * Returns the flag-join transform (streaming OR batch base) and
-    * the rewritten row-local where tree. Scale: one distinct-key
-    * aggregation per predicate at serve start; the pinned key set
-    * partitions like any dimension side (AQE broadcasts selective
-    * ones). */
-  private def decorrelateStreamFilter(
-      s: org.apache.spark.sql.SparkSession, dir: String, w: BoolExp)
-      : (org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-         BoolExp) = {
-    // ONE walk definition with run()'s machinery
-    // (QueryBuilder.decorrelateJoins) — only the deltas live here:
-    // key sets PIN per serve (the staleness contract) and the flag
-    // joins defer into a transform the caller applies to a batch OR
-    // streaming base
-    val (joins, w2) = QueryBuilder.decorrelateJoins(s, dir, w,
-      new java.util.concurrent.atomic.AtomicInteger(), pin = true)
-    (df => joins.foldLeft(df) { case (d, (keys, pk)) =>
-      d.join(keys, Seq(pk), "left") }, w2)
-  }
-
-  /** [[serveStreamAs]] WITH the table directory — closes the stream
-    * half of the capability gap [[secureStream]]'s row-local guard
-    * leaves (Hasura grants permission filters with relationship
-    * predicates on subscriptions, README.md:56-80): a RelPred role
-    * filter decorrelates per serve ([[decorrelateStreamFilter]] — the
-    * pinned-key-set contract) and the BATCH-replay pages serve over
-    * the flag-joined base. Parse errors and denials stay Left. */
+  /** [[serveAs]] for STREAMING subscription documents: parse the
+    * `<table>_stream` text, secure it for the role, and serve the
+    * BATCH-replay pages over the table in `dir` — the live path
+    * ([[serveStreamLiveAs]]) takes the same secured request into
+    * [[Subscriptions.streamServe]], so one secure() covers both. A
+    * relationship-predicate role filter decorrelates inside
+    * [[Subscriptions.streamPages]] (the pinned-key-set contract).
+    * Parse errors and denials are Left values. */
   def serveStreamAs(s: org.apache.spark.sql.SparkSession, dir: String,
       role: String, policy: Policy, doc: String, nPages: Int,
-      schema: GraphQl.Schema, variables: String,
-      operationName: Option[String])
+      schema: GraphQl.Schema = GraphQl.fixtureSchema,
+      variables: String = "{}",
+      operationName: Option[String] = None)
       : Either[String, org.apache.spark.sql.DataFrame] =
     for {
       sr <- GraphQl.parseStream(doc, schema, variables, operationName)
-      m <- mergedStream(sr, role, policy)
-    } yield m.where match {
-      case Some(w) if QueryBuilder.hasRelPred(w) =>
-        val (flagJoin, w2) = decorrelateStreamFilter(s, dir, w)
-        Subscriptions.streamPages(
-          flagJoin(graft.Tables.load(s, dir, m.table)),
-          m.copy(where = Some(w2)), nPages, rel = Some((s, dir)))
-      case _ => Subscriptions.streamPages(
-        graft.Tables.load(s, dir, m.table), m, nPages,
-        rel = Some((s, dir)))
-    }
+      sec <- secureStream(sr, role, policy)
+    } yield Subscriptions.streamPages(graft.Tables.load(s, dir, sec.table),
+      sec, nPages, rel = Some((s, dir)))
 
-  /** The LIVE twin of the (s, dir) [[serveStreamAs]]: the secured —
-    * and, for RelPred roles, decorrelated — request drives
-    * [[Subscriptions.streamServe]] over `stream`, the key-set flags
-    * riding a stream-static join per trigger. Same pinned-key
+  /** The LIVE twin of [[serveStreamAs]]: the secured request drives
+    * [[Subscriptions.streamServe]] over `stream` with the table
+    * directory, so a relationship-predicate role filter's key-set
+    * flags ride a stream-static join per trigger. Same pinned-key
     * staleness contract (spec-pinned: a child row arriving after the
     * serve starts does not flip visibility until re-subscribe). */
   def serveStreamLiveAs(s: org.apache.spark.sql.SparkSession,
@@ -1009,15 +869,8 @@ object Permissions {
       : Either[String, org.apache.spark.sql.streaming.StreamingQuery] =
     for {
       sr <- GraphQl.parseStream(doc, schema, variables, operationName)
-      m <- mergedStream(sr, role, policy)
-    } yield m.where match {
-      case Some(w) if QueryBuilder.hasRelPred(w) =>
-        val (flagJoin, w2) = decorrelateStreamFilter(s, dir, w)
-        Subscriptions.streamServe(flagJoin(stream),
-          m.copy(where = Some(w2)), rel = Some((s, dir)))(push)
-      case _ =>
-        Subscriptions.streamServe(stream, m, rel = Some((s, dir)))(push)
-    }
+      sec <- secureStream(sr, role, policy)
+    } yield Subscriptions.streamServe(stream, sec, rel = Some((s, dir)))(push)
 
   /** Guard a mutation document for `role`: updates/deletes gain the
     * role's row filter (rows outside it are INVISIBLE to the write,
@@ -1061,24 +914,16 @@ object Permissions {
                 "outside the filter — use update for visible rows")
             else Right(())
         } yield Mutations.Insert(t, rows, up, uc, cw)
+      // a present where secures to a present where (`.get`)
       case Mutations.Update(t, w, set, inc, jsonb) =>
-        for {
-          perm <- policy.get(role, t)
-          // jsonb-operator targets are written columns too — an
-          // ungranted column can no more be _append-ed than _set
-          _ <- checkCols(set.map(_._1) ++ inc.map(_._1) ++
-            jsonb.map(_._1) ++ whereCols(w),
-            perm, role, t, "update")
-          w2 <- secureWhere(w, role, policy, perm, t)
-        } yield Mutations.Update(t,
-          andWith(perm.filter, Some(w2)).get, set, inc, jsonb)
+        // jsonb-operator targets are written columns too — an
+        // ungranted column can no more be _append-ed than _set
+        scope(role, policy, t, set.map(_._1) ++ inc.map(_._1) ++
+          jsonb.map(_._1) ++ whereCols(w), Some(w), "update")
+          .map(w2 => Mutations.Update(t, w2.get, set, inc, jsonb))
       case Mutations.Delete(t, w) =>
-        for {
-          perm <- policy.get(role, t)
-          _ <- checkCols(whereCols(w), perm, role, t, "delete")
-          w2 <- secureWhere(w, role, policy, perm, t)
-        } yield Mutations.Delete(t,
-          andWith(perm.filter, Some(w2)).get)
+        scope(role, policy, t, whereCols(w), Some(w), "delete")
+          .map(w2 => Mutations.Delete(t, w2.get))
       // the composite verbs secure member-wise: every step/child is
       // its own grant check against ITS table (an InsertTree's
       // children target the CHILD table's scope)

@@ -436,6 +436,15 @@ object QueryBuilder {
     case _ => false
   }
 
+  /** The refusal every executor WITHOUT the table directory gives a
+    * where carrying relationship predicates — at call (or attach)
+    * time, never at a stream's first trigger. */
+  private[api] def requireRowLocal(executor: String, table: String,
+      where: Option[BoolExp], use: String): Unit =
+    require(!where.exists(hasRelPred),
+      s"$executor on '$table': relationship predicates need the " +
+        s"table directory (use $use)")
+
   final case class And(es: BoolExp*) extends BoolExp {
     require(es.nonEmpty, "_and needs at least one operand")
     private[api] def toColumn: Column = es.map(_.toColumn).reduce(_ && _)
@@ -765,13 +774,21 @@ object QueryBuilder {
   /** Compile + run a root aggregate request: one filter (predicates
     * push to the scan) + one two-phase global aggregate — the partial
     * side runs map-side, so the exchange carries one row per
-    * partition, the cheapest query shape there is at any scale. */
-  def runAggregate(s: SparkSession, dir: String, r: AggRequest): DataFrame =
-    runAggregateOn(graft.Tables.load(s, dir, r.table), r)
+    * partition, the cheapest query shape there is at any scale. A
+    * where carrying relationship predicates decorrelates first
+    * ([[filterWith]], run()'s machinery), so the aggregate folds over
+    * the visible rows only. */
+  def runAggregate(s: SparkSession, dir: String, r: AggRequest): DataFrame = {
+    val base = graft.Tables.load(s, dir, r.table)
+    runAggregateOn(r.where.map(filterWith(graft.Tables.load(s, dir, _),
+      base, _)).getOrElse(base), r.copy(where = None))
+  }
 
   /** [[runAggregate]] over an ALREADY-LOADED base frame — what the
-    * live-aggregate subscription re-evaluates per trigger. */
+    * live-aggregate subscription re-evaluates per trigger. Without
+    * the table directory a relationship predicate refuses here. */
   def runAggregateOn(base: DataFrame, r: AggRequest): DataFrame = {
+    requireRowLocal("runAggregateOn", r.table, r.where, "runAggregate")
     val f0 = r.where.map(w => base.filter(w.toColumn)).getOrElse(base)
     // Hasura aggregates the SLICED set when order_by/limit are given
     // — a TakeOrdered cut feeding the aggregate, not a full-table pass
@@ -1020,9 +1037,7 @@ object QueryBuilder {
     require(req.nested.isEmpty && req.aggRels.isEmpty,
       s"runRoot on '${req.table}': relationship selections need the " +
         "table directory (use run)")
-    require(!req.where.exists(hasRelPred),
-      s"runRoot on '${req.table}': relationship predicates need the " +
-        "table directory (use run)")
+    requireRowLocal("runRoot", req.table, req.where, "run")
     require(req.orderAggs.isEmpty,
       s"runRoot on '${req.table}': ordering aggregates need the " +
         "table directory (use run)")
@@ -1073,35 +1088,31 @@ object QueryBuilder {
     }
   }
 
-  /** Compile + run a request against the parquet tables in `dir`. */
   /** Decorrelate every [[RelPred]] in `w` against `base`: per
     * predicate, build the DISTINCT satisfying child keys (recursing
     * for nested relationship predicates), left-join them onto the
     * parent as a flag column, and rewrite the leaf to [[FlagRef]] —
     * after which the whole tree is one row-local boolean. Scale: one
     * distinct-key aggregation (map-side partial) + one key join per
-    * predicate; AQE broadcasts selective key sets. */
-  /** The RelPred walk itself — ONE definition shared by
-    * [[decorrelate]] (eager joins, run()'s path) and the stream
-    * serve's deferred variant ([[Permissions]]): per predicate, the
-    * DISTINCT satisfying child keys build (recursing for nested
-    * relationship predicates) as a flag-carrying key-set frame, and
-    * the leaf rewrites to [[FlagRef]]. `pin = true` localCheckpoints
-    * each key set eagerly — the stream serve's per-serve staleness
-    * contract (batch callers keep lazy plans so pushdown composes). */
-  private[api] def decorrelateJoins(s: SparkSession, dir: String,
-      w: BoolExp, ctr: java.util.concurrent.atomic.AtomicInteger,
-      pin: Boolean = false): (Seq[(DataFrame, String)], BoolExp) =
-    decorrelateJoinsWith(graft.Tables.load(s, dir, _), w, ctr, pin)
-
-  /** [[decorrelateJoins]] with an EXPLICIT child loader — the
-    * mutation path (r18) resolves relationship-predicate children
-    * from its STORE REGISTRY's current folded state (Hasura's
-    * same-transaction visibility), not the fixture directory. */
-  private[api] def decorrelateJoinsWith(
-      loadChild: String => DataFrame, w: BoolExp,
+    * predicate; AQE broadcasts selective key sets. `pin = true`
+    * localCheckpoints each key set eagerly — the stream executors'
+    * per-serve staleness contract: the key sets are built once, when
+    * the serve starts, and each trigger pays a stream-static join
+    * (batch callers keep lazy plans so pushdown composes). */
+  private[api] def decorrelate(s: SparkSession, dir: String,
+      base: DataFrame, w: BoolExp,
       ctr: java.util.concurrent.atomic.AtomicInteger,
-      pin: Boolean = false): (Seq[(DataFrame, String)], BoolExp) = {
+      pin: Boolean = false): (DataFrame, BoolExp) =
+    decorrelateWith(graft.Tables.load(s, dir, _), base, w, ctr, pin)
+
+  /** [[decorrelate]] with an EXPLICIT child loader — the mutation
+    * path (r18) resolves relationship-predicate children from its
+    * STORE REGISTRY's current folded state (Hasura's same-transaction
+    * visibility), not the fixture directory. */
+  private[api] def decorrelateWith(loadChild: String => DataFrame,
+      base: DataFrame, w: BoolExp,
+      ctr: java.util.concurrent.atomic.AtomicInteger,
+      pin: Boolean = false): (DataFrame, BoolExp) = {
     val joins = Seq.newBuilder[(DataFrame, String)]
     def walk(e: BoolExp): BoolExp = e match {
       case RelPred(table, childKey, parentKey, pred) =>
@@ -1123,28 +1134,15 @@ object QueryBuilder {
       case leaf => leaf
     }
     val w2 = walk(w)
-    (joins.result(), w2)
-  }
-
-  private[api] def decorrelate(s: SparkSession, dir: String,
-      base: DataFrame, w: BoolExp,
-      ctr: java.util.concurrent.atomic.AtomicInteger)
-      : (DataFrame, BoolExp) =
-    decorrelateWith(graft.Tables.load(s, dir, _), base, w, ctr)
-
-  private[api] def decorrelateWith(loadChild: String => DataFrame,
-      base: DataFrame, w: BoolExp,
-      ctr: java.util.concurrent.atomic.AtomicInteger)
-      : (DataFrame, BoolExp) = {
-    val (joins, w2) = decorrelateJoinsWith(loadChild, w, ctr)
-    (joins.foldLeft(base) { case (d, (keys, pk)) =>
+    (joins.result().foldLeft(base) { case (d, (keys, pk)) =>
       d.join(keys, Seq(pk), "left") }, w2)
   }
 
   /** Filter `df` by `w` with relationship predicates decorrelated
     * through `loadChild` — the [[run]] root-where machinery exposed
-    * for the MUTATION executor (r18): flag columns drop after the
-    * filter so write deltas stay schema-clean. */
+    * for [[runAggregate]] and the MUTATION executor (r18): flag
+    * columns drop after the filter so aggregates and write deltas see
+    * the table's own schema. */
   private[api] def filterWith(loadChild: String => DataFrame,
       df: DataFrame, w: BoolExp): DataFrame =
     if (!hasRelPred(w)) df.filter(w.toColumn)
@@ -1155,6 +1153,7 @@ object QueryBuilder {
       d2.filter(w2.toColumn).drop(flags: _*)
     }
 
+  /** Compile + run a request against the parquet tables in `dir`. */
   def run(s: SparkSession, dir: String, req0: Request): DataFrame =
     runOn(s, dir, graft.Tables.load(s, dir, req0.table), req0)
 

@@ -190,7 +190,8 @@ object Subscriptions {
     * ([[QueryBuilder.runAggregateOn]]) — a count/sum can retract when
     * an upsert changes a row, which no append stream expresses. Same
     * state posture (one latest-wins row per key, localCheckpoint
-    * lineage cut), same connection-scoped lifetime. */
+    * lineage cut), same connection-scoped lifetime. A relationship
+    * predicate in the where refuses at attach (no table directory). */
   def liveAggregate(stream: DataFrame,
       req: QueryBuilder.AggRequest, keyCol: String,
       seqCol: Option[String] = None)
@@ -201,9 +202,12 @@ object Subscriptions {
   def liveAggregate(stream: DataFrame,
       req: QueryBuilder.AggRequest, keyCols: Seq[String],
       seqCol: Option[String])
-      (push: (Long, DataFrame) => Unit): StreamingQuery =
+      (push: (Long, DataFrame) => Unit): StreamingQuery = {
+    QueryBuilder.requireRowLocal("liveAggregate", req.table, req.where,
+      "runAggregate")
     liveFold(stream, keyCols, seqCol)(
       latest => QueryBuilder.runAggregateOn(latest, req))(push)
+  }
 
   // ---- Hasura streaming subscriptions (`<table>_stream`) -------------
 
@@ -343,6 +347,33 @@ object Subscriptions {
     }.reduce(_ || _)
   }
 
+  /** A where carrying RELATIONSHIP predicates (a role's
+    * filter-with-relationship grant, or the request's own)
+    * decorrelates ONCE per serve, against the table directory in
+    * `rel`: each predicate's DISTINCT satisfying parent-key set is
+    * PINNED for the life of the serve (the documented staleness
+    * contract: child rows arriving after the serve starts do not flip
+    * visibility mid-stream, matching the cursor scan's own
+    * no-retraction semantics; re-subscribe to refresh), and `frame` —
+    * a batch base or a stream — left-joins it as a flag column the
+    * rewritten where reads row-locally: a stream-static join each
+    * trigger pays on the already-filtered delta, never a per-trigger
+    * child-table re-aggregation. Without `rel` such a where refuses
+    * here, at call or attach time. Any other where passes through. */
+  private def flagJoined(frame: DataFrame, sr: StreamRequest,
+      rel: Option[(org.apache.spark.sql.SparkSession, String)],
+      executor: String): (DataFrame, StreamRequest) =
+    (sr.where, rel) match {
+      case (Some(w), Some((s, dir))) if QueryBuilder.hasRelPred(w) =>
+        val (joined, w2) = QueryBuilder.decorrelate(s, dir, frame, w,
+          new java.util.concurrent.atomic.AtomicInteger(), pin = true)
+        (joined, sr.copy(where = Some(w2)))
+      case _ =>
+        QueryBuilder.requireRowLocal(executor, sr.table, sr.where,
+          "the rel argument")
+        (frame, sr)
+    }
+
   private def cursorOrder(sr: StreamRequest): Seq[Column] =
     sr.cursorFields.map(f =>
       if (sr.ascending) col(f).asc else col(f).desc)
@@ -364,11 +395,13 @@ object Subscriptions {
     * the page index attached by a window over the already-limited
     * set (the W5 post-limit presentation pattern — bounded by
     * construction). Filters — the where tree AND the cursor lower
-    * bound — sit below the limit, so both push into the scan. */
-  def streamPages(base: DataFrame, sr: StreamRequest, nPages: Int,
+    * bound — sit below the limit, so both push into the scan.
+    * Relationship predicates in the where need `rel` ([[flagJoined]]). */
+  def streamPages(base0: DataFrame, sr0: StreamRequest, nPages: Int,
       rel: Option[(org.apache.spark.sql.SparkSession, String)] = None)
       : DataFrame = {
     require(nPages > 0, "nPages must be positive")
+    val (base, sr) = flagJoined(base0, sr0, rel, "streamPages")
     val bounded = Seq(Some(nonNullCursor(sr)),
         sr.where.map(_.toColumn),
         sr.initialTuple.map(pastCursor(sr, _)))
@@ -395,17 +428,20 @@ object Subscriptions {
     * Hasura caveat carries over: a LATE row arriving below the
     * already-advanced cursor is never delivered — `_stream` is a
     * cursor scan, not a retraction stream. State is one scalar (the
-    * cursor) — nothing snapshot-sized lives across triggers. */
-  def streamServe(stream: DataFrame, sr: StreamRequest,
+    * cursor) — nothing snapshot-sized lives across triggers.
+    * Relationship predicates in the where need `rel` ([[flagJoined]]:
+    * key sets pinned at attach). */
+  def streamServe(stream0: DataFrame, sr0: StreamRequest,
       rel: Option[(org.apache.spark.sql.SparkSession, String)] = None)
       (push: (Long, DataFrame) => Unit): StreamingQuery = {
     // a nested selection without the directory context would only
     // surface when the first NON-EMPTY trigger reaches deliver() —
     // an async StreamingQueryException minutes in; loud at attach
     // instead, like the sibling serve paths
-    require(sr.nested.isEmpty || rel.isDefined,
-      s"${sr.table}_stream: relationship selections need the table " +
+    require(sr0.nested.isEmpty || rel.isDefined,
+      s"${sr0.table}_stream: relationship selections need the table " +
         "directory — serve through the (s, dir) overloads")
+    val (stream, sr) = flagJoined(stream0, sr0, rel, "streamServe")
     var cursor: Option[Seq[Any]] = sr.initialTuple
     var pagesDone: Long = 0L
     stream.writeStream

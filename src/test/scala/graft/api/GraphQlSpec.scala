@@ -2464,33 +2464,45 @@ class GraphQlSpec extends SparkSpec {
   // ---- the shared document front end --------------------------------
 
   /** One document entry point: the operation kind it serves, a valid
-    * root selection for it, and how to call it with a document and a
-    * variables map (`takesVars = false`: it has no variables
-    * parameter). */
+    * root selection for it, and how to call it with a document, a
+    * variables map and an operationName (`takesVars = false`: it has
+    * no variables parameter). */
   private case class Entry(name: String, kind: String, sel: String,
-      run: (String, String) => Either[String, Any],
+      run: (String, String, Option[String]) => Either[String, Any],
       takesVars: Boolean = true)
 
   private def entries: Seq[Entry] = Seq(
     Entry("parse", "query", "region { r_regionkey }",
-      (d, v) => GraphQl.parse(d, variables = v)),
+      (d, v, o) => GraphQl.parse(d, variables = v, operationName = o)),
     Entry("parseRoots", "query", "region { r_regionkey }",
-      (d, v) => GraphQl.parseRoots(d, variables = v)),
+      (d, v, o) => GraphQl.parseRoots(d, variables = v,
+        operationName = o)),
     Entry("parseRootAggregate", "query",
       "region_aggregate { aggregate { count } }",
-      (d, v) => GraphQl.parseRootAggregate(d, v)),
+      (d, v, o) => GraphQl.parseRootAggregate(d, v, o)),
     Entry("parseStream", "subscription",
       "events_stream(cursor: {initial_value: {event_id: null}}, " +
         "batch_size: 5) { event_id }",
-      (d, v) => GraphQl.parseStream(d, variables = v)),
+      (d, v, o) => GraphQl.parseStream(d, variables = v,
+        operationName = o)),
     Entry("parseMutationFields", "mutation", mutationSel,
-      (d, v) => GraphQl.parseMutationFields(d, v)),
+      (d, v, o) => GraphQl.parseMutationFields(d, v, operationName = o)),
     Entry("serveIntrospection", "query", "__typename",
-      (d, _) => GraphQl.serveIntrospection(spark, sf("sf0.001"), d),
+      (d, _, o) => GraphQl.serveIntrospection(spark, sf("sf0.001"), d,
+        operationName = o),
       takesVars = false))
 
   private val mutationSel =
     "delete_region(where: {r_regionkey: {_eq: 1}}) { affected_rows }"
+
+  /** Fault-free documents every entry point must serve: a name and
+    * the (document, operationName) for an entry point. */
+  private val cleanDocuments
+      : Seq[(String, Entry => (String, Option[String]))] = Seq(
+    ("one operation", e => (s"${e.kind} A { ${e.sel} }", None)),
+    ("two operations, one named by operationName",
+      e => (s"${e.kind} A { ${e.sel} } ${e.kind} B { ${e.sel} }",
+        Some("B"))))
 
   /** Document-level faults: a name, the faulty (document, variables)
     * for an entry point (None where the fault cannot be spelled for
@@ -2525,13 +2537,15 @@ class GraphQlSpec extends SparkSpec {
       "variable, fragment and error rules") {
     val wrong = for {
       e <- entries
-      // the fault-free document serves, so each fault below is the
+      // the fault-free documents serve, so each fault below is the
       // only thing wrong with its document
-      _ = assert(e.run(s"${e.kind} A { ${e.sel} }", "{}").isRight,
-        s"${e.name}: the clean document")
+      _ = cleanDocuments.foreach { case (clean, build) =>
+        val (doc, op) = build(e)
+        assert(e.run(doc, "{}", op).isRight, s"${e.name}: $clean")
+      }
       (fault, build, want) <- documentFaults
       (doc, vars) <- build(e)
-      got = e.run(doc, vars)
+      got = e.run(doc, vars, None)
       if !got.left.exists(_.contains(want))
     } yield s"${e.name} / $fault: want '$want', got $got"
     assert(wrong.isEmpty, wrong.mkString("\n", "\n", ""))

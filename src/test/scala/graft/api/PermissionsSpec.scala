@@ -288,19 +288,19 @@ class PermissionsSpec extends SparkSpec {
       "analyst", policy).isLeft)
     assert(Permissions.secureStream(sr.copy(table = "nope"),
       "analyst", policy).isLeft)
-    // a role filter CARRYING a relationship predicate is legal for
-    // run() (which decorrelates) but has no row-local form for the
-    // stream/aggregate executors — denied at secure time, not a
-    // first-trigger crash
+    // a role filter CARRYING a relationship predicate ANDs in like
+    // any other: securing only rewrites the request, and the
+    // executors with the table directory decorrelate it
+    val rel = RelPred("orders", "o_custkey", "c_custkey",
+      Gt("o_totalprice", 0.0))
     val relPolicy = Policy(Map(("rp", "customer") -> TablePerm(
-      filter = Some(RelPred("orders", "o_custkey", "c_custkey",
-        Gt("o_totalprice", 0.0))))))
+      filter = Some(rel))))
     val srm = Permissions.secureStream(sr, "rp", relPolicy)
-    assert(srm.isLeft && srm.left.exists(_.contains("relationship")))
-    val arm = Permissions.secureAggregate(
-      QueryBuilder.AggRequest("customer",
-        aggs = Seq(CountOf("c_custkey", "count"))), "rp", relPolicy)
-    assert(arm.isLeft && arm.left.exists(_.contains("relationship")))
+      .fold(m => fail(m), identity)
+    assert(srm.where === Some(rel))
+    val arm = Permissions.secureAggregate(ar, "rp", relPolicy)
+      .fold(m => fail(m), identity)
+    assert(arm.where === Some(And(rel, Gt("c_acctbal", 0.0))))
   }
 
   test("serveIntrospectionAs: ungranted tables/columns vanish from " +
@@ -351,8 +351,8 @@ class PermissionsSpec extends SparkSpec {
   }
 
   test("serveAggregateAs: a relationship-predicate role filter " +
-    "decorrelates to the semi-join answer; the row-local path still " +
-    "denies, pointing here") {
+    "decorrelates to the semi-join answer, the same count " +
+    "runAggregate gives the secured request") {
     import org.apache.spark.sql.functions.col
     val pol = Policy(Map(("auditor", "customer") -> TablePerm(
       filter = Some(RelPred("orders", "o_custkey", "c_custkey",
@@ -370,9 +370,10 @@ class PermissionsSpec extends SparkSpec {
     val expect = c.filter(col("c_mktsegment") === "BUILDING")
       .join(o, c("c_custkey") === o("o_custkey"), "left_semi").count()
     assert(expect > 0 && served === expect)
-    val denied = Permissions.secureAggregate(req, "auditor", pol)
-    assert(denied.isLeft &&
-      denied.left.exists(_.contains("serveAggregateAs")))
+    val sec = Permissions.secureAggregate(req, "auditor", pol)
+      .fold(m => fail(m), identity)
+    assert(QueryBuilder.runAggregate(spark, sf("sf0.001"), sec)
+      .collect().head.getLong(0) === served)
     // the TEXT path serves the same request to the same answer
     val viaText = Permissions.serveAggregateTextAs(spark, sf("sf0.001"),
       "auditor", pol,
@@ -389,8 +390,11 @@ class PermissionsSpec extends SparkSpec {
   test("serveStreamAs: stream text through parse -> secure -> pages; " +
     "the role filter gates rows, denials are Left values") {
     import spark.implicits._
-    val base = Seq((1L, "A", "x"), (2L, "B", "x"), (3L, "A", "y"),
+    val dir = java.nio.file.Files.createTempDirectory("graft_ssa")
+      .toString
+    Seq((1L, "A", "x"), (2L, "B", "x"), (3L, "A", "y"),
       (4L, "A", "z")).toDF("k", "seg", "c_name")
+      .write.parquet(s"$dir/t.parquet")
     val pol = Policy(Map(("r1", "t") -> TablePerm(
       filter = Some(Eq("seg", "A")), columns = Some(Set("k", "seg")))))
     val doc =
@@ -399,19 +403,19 @@ class PermissionsSpec extends SparkSpec {
         |    k seg
         |  }
         |}""".stripMargin
-    val pages = Permissions.serveStreamAs(base, "r1", pol, doc,
+    val pages = Permissions.serveStreamAs(spark, dir, "r1", pol, doc,
       nPages = 2).fold(m => fail(m), identity)
     // k=2 is seg B — invisible to r1; pages carry 3 and 4 only
     assert(pages.select("k").collect().map(_.getLong(0)).sorted
       === Array(3L, 4L))
     // an ungranted selected column denies the whole subscription
-    val denied = Permissions.serveStreamAs(base, "r1", pol,
+    val denied = Permissions.serveStreamAs(spark, dir, "r1", pol,
       doc.replace("k seg", "k c_name"), nPages = 2)
     assert(denied.isLeft && denied.left.exists(_.contains("c_name")))
     // __typename's allowlist exemption is SCOPED to the read path:
     // the stream executor cannot serve it, so here it denies as a
     // clean Left — never an unresolved-column crash at execution
-    val metaDenied = Permissions.serveStreamAs(base, "r1", pol,
+    val metaDenied = Permissions.serveStreamAs(spark, dir, "r1", pol,
       doc.replace("k seg", "k __typename"), nPages = 2)
     assert(metaDenied.isLeft &&
       metaDenied.left.exists(_.contains("__typename")))
@@ -481,11 +485,6 @@ class PermissionsSpec extends SparkSpec {
       q2.processAllAvailable()
       assert(evs2 === Vector(7L))
     } finally q2.stop()
-    // the loaded-base overload still denies cleanly (no dir to build
-    // the key set from)
-    val denied = Permissions.serveStreamAs(
-      Seq((1L, 1L)).toDF("ev", "user_id"), "aud", pol, doc, nPages = 1)
-    assert(denied.isLeft && denied.left.exists(_.contains("decorrelates")))
   }
 
   test("serveMutationsAs: mutation text through parse -> secure -> " +
@@ -743,6 +742,75 @@ class PermissionsSpec extends SparkSpec {
       case Left(m) => assert(m.contains("events"), m)
       case Right(r) => fail(s"partial answer served: ${r.map(_._1)}")
     }
+  }
+
+  test("serveRootsAs serves relationship-predicate grants on every " +
+    "root kind: batched aggregate, stream and read roots answer the " +
+    "one-root serves' rows and the semi-join ground truth") {
+    import org.apache.spark.sql.functions.col
+    val dir = sf("sf0.001")
+    val pol = Policy(Map(
+      ("auditor", "customer") -> TablePerm(
+        filter = Some(RelPred("orders", "o_custkey", "c_custkey",
+          And(Eq("o_orderstatus", "O"),
+            Eq("o_orderpriority", "1-URGENT"))))),
+      ("auditor", "events") -> TablePerm(
+        filter = Some(RelPred("customer", "c_custkey", "user_id",
+          Eq("c_mktsegment", "BUILDING")))),
+      ("auditor", "orders") -> TablePerm()))
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().toSeq.map(_.toSeq)
+    def roots(doc: String) = Permissions.serveRootsAs(spark, dir,
+      "auditor", pol, doc).fold(m => fail(m), identity)
+      .map { case (k, df) => k -> rowsOf(df) }.toMap
+    // ground truth: the grants as plain semi-joins
+    val cust = graft.Tables.load(spark, dir, "customer")
+    val urgent = graft.Tables.load(spark, dir, "orders")
+      .filter(col("o_orderstatus") === "O" &&
+        col("o_orderpriority") === "1-URGENT")
+    val custRows = cust
+      .join(urgent, cust("c_custkey") === urgent("o_custkey"),
+        "left_semi")
+      .filter(col("c_acctbal") > 0.0)
+    val building = cust.filter(col("c_mktsegment") === "BUILDING")
+    val events = graft.Tables.load(spark, dir, "events")
+    val eventRows = events
+      .join(building, events("user_id") === building("c_custkey"),
+        "left_semi")
+      .filter(col("event_id").isNotNull)
+      .orderBy("event_id").limit(15)
+      .select("event_id", "user_id").collect().toSeq.zipWithIndex
+      .map { case (r, i) => Seq(i / 5L, r.get(0), r.get(1)) }
+    val readTruth = rowsOf(custRows.orderBy("c_custkey").limit(10)
+      .select("c_custkey", "c_name"))
+    val countTruth = custRows.count()
+    assert(countTruth > 0 && countTruth < cust.count())
+    assert(eventRows.size == 15)
+    val agg = "customer_aggregate(where: {c_acctbal: {_gt: 0.0}}) " +
+      "{ aggregate { n: count(columns: c_custkey) } }"
+    val read = "customer(where: {c_acctbal: {_gt: 0.0}}, " +
+      "order_by: {c_custkey: asc}, limit: 10) { c_custkey c_name }"
+    val stream = "events_stream(cursor: {initial_value: " +
+      "{event_id: null}}, batch_size: 5) { event_id user_id }"
+    val oneAgg = rowsOf(Permissions.serveAggregateAs(spark, dir,
+      "auditor", pol, GraphQl.parseRootAggregate(s"{ $agg }")
+        .fold(m => fail(m), identity)).fold(m => fail(m), identity))
+    val oneRead = rowsOf(Permissions.serveAs(spark, dir, "auditor", pol,
+      s"{ $read }").fold(m => fail(m), identity))
+    val oneStream = rowsOf(Permissions.serveStreamAs(spark, dir,
+      "auditor", pol, s"subscription { $stream }", nPages = 3)
+      .fold(m => fail(m), identity))
+    assert(oneAgg === Seq(Seq(countTruth)))
+    assert(oneRead === readTruth)
+    assert(oneStream === eventRows)
+    // a query document batching the aggregate with the read
+    val q = roots(s"{ a: $agg\n r: $read }")
+    assert(q("a") === oneAgg)
+    assert(q("r") === oneRead)
+    // a subscription document batching the stream with the read
+    val sub = roots(s"subscription { e: $stream\n r: $read }")
+    assert(sub("e") === oneStream)
+    assert(sub("r") === oneRead)
   }
 
   test("relationship predicates in mutation wheres secure like a " +

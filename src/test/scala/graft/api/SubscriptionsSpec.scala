@@ -729,4 +729,34 @@ class SubscriptionsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("need the table directory"))
   }
+
+  test("executors without a table directory refuse a relationship-" +
+    "predicate where when called or attached — never at the first " +
+    "trigger") {
+    val rel = RelPred("c", "ck", "id", Eq("seg", "A"))
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String, Double)]
+    val stream = input.toDF().toDF("id", "typ", "v")
+    val sr = Subscriptions.StreamRequest("t", "id", None,
+      batchSize = 2, fields = Seq("id"), where = Some(And(rel)))
+    val ar = AggRequest("t", where = Some(Not(rel)),
+      aggs = Seq(CountAll("n")))
+    def refused(what: String)(call: => Unit): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(s"$what on 't': relationship " +
+        "predicates need the table directory"), e.getMessage)
+    }
+    // the streaming executors: the query would start here and fail
+    // at its first trigger; stop it if it does, so the refusal is
+    // the only way through
+    refused("streamServe") {
+      Subscriptions.streamServe(stream, sr)((_, _) => ()).stop()
+    }
+    refused("liveAggregate") {
+      Subscriptions.liveAggregate(stream, ar, "id")((_, _) => ()).stop()
+    }
+    val batch = Seq((1L, "x", 1.0)).toDF("id", "typ", "v")
+    refused("runAggregateOn") { QueryBuilder.runAggregateOn(batch, ar) }
+    refused("streamPages") { Subscriptions.streamPages(batch, sr, 1) }
+  }
 }
