@@ -14,6 +14,10 @@ import org.apache.spark.sql.SparkSession
   *    inflates a query in one order but not the others, and min() erases it.
   *  - A GC-seconds column per query (delta of collector time around the
   *    winning run) so memory pressure is visible in the data, not guessed.
+  *  - Each run writes the key's frame to the `noop` sink, so every column
+  *    of every row is materialised (a `count()` lets Catalyst prune the
+  *    projection), and the cache is cleared after each run, outside the
+  *    clock, so no key reads what an earlier one cached.
   *
   * Output: ONE compact JSON line on stdout (3-decimal seconds, no vs_prev —
   * full-precision lines overflowed the driver's head-truncated tail buffer
@@ -129,17 +133,22 @@ object Bench {
     // by event_id, so it is a one-dimension-clustered layout, not a fair
     // baseline). The combined round-trip stays in SparkEntry.queries for
     // correctness but is not bench-timed — it double-counts the write.
+    // every key is timed into the noop sink: every column of every row
+    // is materialised, as a caller pays, where count() lets Catalyst
+    // prune the projection away
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
     val entries: Seq[(String, () => Unit)] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filterNot(_._1 == "q57_zorder_scan")
-        .map { case (n, fn) => n -> (() => { fn(spark, sfDir).count(); () }) } ++
+        .map { case (n, fn) => n -> (() => noop(fn(spark, sfDir))) } ++
       Seq[(String, () => Unit)](
         "q57_write" -> (() => queries.RelationalQueries.q57WriteLayout(
           spark, sfDir, zPath + "_w")),
         "q57_scan" -> (() =>
-          { queries.RelationalQueries.q57Scan(spark, zPath).count(); () }),
+          noop(queries.RelationalQueries.q57Scan(spark, zPath))),
         "q57_scan_unclustered" -> (() =>
-          { queries.RelationalQueries.q57Scan(spark, uPath).count(); () }))
+          noop(queries.RelationalQueries.q57Scan(spark, uPath))))
 
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val gcStart = gcMillis()
@@ -165,6 +174,8 @@ object Bench {
         }
         val t = (System.nanoTime() - t0) / 1e9
         val gc = (gcMillis() - g0) / 1e3
+        // untimed: what one key cached never serves the next one
+        spark.catalog.clearCache()
         if (ok) samples(name) = (t, gc) :: samples.getOrElse(name, Nil)
       }
     }

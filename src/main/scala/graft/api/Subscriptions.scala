@@ -103,6 +103,8 @@ object Subscriptions {
     require(req.nested.isEmpty && req.aggRels.isEmpty,
       s"subscription on '${req.table}': relationship selections " +
         "need the table directory (use the (spark, dir) overload)")
+    QueryBuilder.requireRowLocal("liveQuery", req.table, req.where,
+      "the (spark, dir) overload")
     liveFold(stream, keyCols, seqCol)(
       latest => QueryBuilder.runRoot(latest, req))(push)
   }

@@ -24,12 +24,15 @@ object HammingBands {
   def bandKeys(hash: org.apache.spark.sql.Column, nBands: Int,
       bandBits: Int): org.apache.spark.sql.Column = {
     require(nBands * bandBits <= 64, "bands exceed 64 bits")
-    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
     array((0 until nBands).map(b0 =>
-      struct(lit(b0).as("b"),
-        shiftright(hash, b0 * bandBits).bitwiseAND(lit(mask))
-          .as("v"))): _*)
+      struct(lit(b0).as("b"), band(hash, b0, bandBits).as("v"))): _*)
   }
+
+  /** Band `i`'s `bandBits`-bit value of `hash`. */
+  private def band(hash: org.apache.spark.sql.Column, i: Int,
+      bandBits: Int): org.apache.spark.sql.Column =
+    shiftright(hash, i * bandBits).bitwiseAND(
+      lit(if (bandBits == 64) -1L else (1L << bandBits) - 1))
 
   /** Top-k nearest hashes to `query` by exact hamming distance —
     * SIMILARITY SEARCH over the same hash space the dedup pairs use
@@ -72,23 +75,46 @@ object HammingBands {
 
   /** (a, b, d): unordered id pairs (a < b) within `maxDist`, with the
     * exact hamming distance. `hashed` must carry `idCol` and a LongType
-    * `hashCol`; null hashes are dropped. */
+    * `hashCol`; null hashes are dropped. The closing `distinct()` also
+    * collapses pairs that repeated input rows produce; over unique ids
+    * [[candidatePairs]] is already duplicate-free without its exchange. */
   def pairs(hashed: DataFrame, idCol: String, hashCol: String,
+      nBands: Int, bandBits: Int, maxDist: Int): DataFrame =
+    candidatePairs(hashed, idCol, hashCol, nBands, bandBits, maxDist)
+      .distinct()
+
+  /** [[pairs]] without the closing `distinct()` exchange: two rows
+    * meet on every band they agree on, and only the meeting on the
+    * LOWEST agreeing band is kept, so each pair of input rows is
+    * emitted once. What a consumer that is indifferent to repeated
+    * input rows (union-find) reads.
+    *
+    * Both join sides are one banded frame under two aliases, joined
+    * through a shuffle (a `shuffle_hash` hint): the two exchanges are
+    * then the same plan, which AQE runs once and reuses, so `hashed` is
+    * scanned and hashed once. A broadcast join would compute it once per
+    * side; a sort-merge join would also sort both sides of every band
+    * key, where the hash join builds one partition's band rows. Null
+    * hashes are dropped by their null band values, above the hash's
+    * projection; a filter on the hash column itself would be pushed
+    * below it and evaluate the hash a second time. */
+  def candidatePairs(hashed: DataFrame, idCol: String, hashCol: String,
       nBands: Int, bandBits: Int, maxDist: Int): DataFrame = {
     require(nBands > maxDist,
       s"pigeonhole needs nBands ($nBands) > maxDist ($maxDist)")
-    val hs = hashed.filter(col(hashCol).isNotNull)
-    val banded = hs.withColumn("band",
-      explode(bandKeys(col(hashCol), nBands, bandBits)))
-    val a = banded.select(col(idCol).as("a"), col(hashCol).as("ha"),
-      col("band"))
-    val b = banded.select(col(idCol).as("b"), col(hashCol).as("hb"),
-      col("band"))
-    a.join(b, Seq("band"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long").as("d"))
+    val banded = hashed.select(col(idCol).as("id"), col(hashCol).as("h"),
+        explode(bandKeys(col(hashCol), nBands, bandBits)).as("band"))
+      .filter(col("band.v").isNotNull)
+    val xor = col("x.h").bitwiseXOR(col("y.h"))
+    val lowestAgreeing = (0 until nBands).foldRight(lit(null).cast("int")) {
+      (i, later) => when(band(xor, i, bandBits) === 0L, lit(i))
+        .otherwise(later)
+    }
+    banded.as("x").join(banded.as("y").hint("shuffle_hash"),
+        col("x.band") === col("y.band"))
+      .filter(col("x.id") < col("y.id") && col("x.band.b") === lowestAgreeing)
+      .select(col("x.id").as("a"), col("y.id").as("b"),
+        bit_count(xor).cast("long").as("d"))
       .filter(col("d") <= maxDist)
-      .distinct()
   }
 }

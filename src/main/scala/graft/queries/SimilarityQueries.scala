@@ -648,14 +648,14 @@ object SimilarityQueries {
     val m = 8; val ksub = 4; val dsub = 8
     val cb = pinnedPqCodebook(m, ksub, dsub)
     val e = embNorm(s, dir, cached = false)
-    val book = e.filter(col("vec_id") < nCells)
+    // the first-16 cells and the query vector in one driver collect
+    val fetched = e.filter(col("vec_id") < nCells || col("vec_id") === queryId)
       .select(col("vec_id"), col("nemb")).collect()
       .map(r => r.getLong(0) ->
         r.getAs[scala.collection.Seq[Double]](1).toSeq)
-      .sortBy(_._1).toSeq
-    val qn = e.filter(col("vec_id") === queryId)
-      .select(col("nemb")).head()
-      .getAs[scala.collection.Seq[Double]](0).toSeq
+    val book = fetched.filter(_._1 < nCells).sortBy(_._1).toSeq
+    val qn = fetched.find(_._1 == queryId).map(_._2).getOrElse(
+      throw new NoSuchElementException(s"no embedding with vec_id $queryId"))
     def dotL(a: Seq[Double], b: Seq[Double]): Double =
       a.lazyZip(b).map(_ * _).sum
     val cellDot = book.map { case (id, c) => id -> dotL(c, qn) }.toMap

@@ -161,16 +161,21 @@ object TextQueries {
       .limit(300)
 
   /** MinHash signatures (k=4, word-3-gram shingles) — the per-document half
-    * of MinHash/LSH dedup, oracle-checkable because hashes are md5-derived. */
+    * of MinHash/LSH dedup, oracle-checkable because hashes are md5-derived.
+    * The signature is the projection of the one TakeOrderedAndProject
+    * (a Project directly between the limit and the sort), so only the 300
+    * answer rows are shingled and signed, in one job; subexpression
+    * elimination evaluates the shingle array once per row for its four
+    * min-hashes. */
   def q29MinhashSig(s: SparkSession, dir: String): DataFrame = {
     val sig = minhashSignature(graft.functions.TextKernelExpressions
       .wordShinglesFast(col("text"), 3), 4)
     docs(s, dir)
-      .select(col("doc_id"), sig.as("sig"))
-      .select(col("doc_id"),
-        element_at(col("sig"), 1).as("s0"), element_at(col("sig"), 2).as("s1"),
-        element_at(col("sig"), 3).as("s2"), element_at(col("sig"), 4).as("s3"))
+      .select(col("doc_id"), col("text"))
       .orderBy("doc_id")
+      .select(col("doc_id"),
+        element_at(sig, 1).as("s0"), element_at(sig, 2).as("s1"),
+        element_at(sig, 3).as("s2"), element_at(sig, 4).as("s3"))
       .limit(300)
   }
 
@@ -353,22 +358,30 @@ object TextQueries {
       maxDist: Int = 3): DataFrame =
     simhashPairsRaw(s, dir, maxDist).orderBy("a", "b")
 
-  /** q48 without the presentation sort — the form compositions (q62,
-    * q70) consume. EliminateSorts has no case for a Sort under the Union
-    * that componentLabels builds, so feeding the SORTED variant into a
-    * composition would really pay the range-exchange + global sort. */
+  /** q48 without the presentation sort — the form compositions (q70,
+    * q151, q196) consume. EliminateSorts has no case for a Sort under the
+    * Union that componentLabels builds, so feeding the SORTED variant into
+    * a composition would really pay the range-exchange + global sort. The
+    * closing `distinct()` stays for q48's own output; q62's union-find
+    * reads [[simhashCandidates]]. */
   private[graft] def simhashPairsRaw(s: SparkSession, dir: String,
-      maxDist: Int = 3): DataFrame = {
-    val sh = docs(s, dir)
-      .select(col("doc_id"), graft.functions.TextKernelExpressions
-        .simhashMd5(col("text"), 32).as("sh"))
-      .transform(Materialize.pin)
+      maxDist: Int = 3): DataFrame =
+    simhashCandidates(s, dir, maxDist).distinct()
+
+  /** (a, b, d) simhash pairs without the `distinct()` exchange: doc_id
+    * is unique, so the banded join already emits each pair once
+    * ([[graft.functions.HammingBands.candidatePairs]]). The simhash is
+    * not pinned: both join sides read one reused exchange, so it runs
+    * once per document without a cache-build job. */
+  private def simhashCandidates(s: SparkSession, dir: String,
+      maxDist: Int = 3): DataFrame =
     // shared pigeonhole banding (graft.functions.HammingBands — also
     // the image dHash pairs' shape): 4 x 8-bit bands over the 32-bit
     // simhash, lossless for maxDist <= 3
-    graft.functions.HammingBands.pairs(sh, "doc_id", "sh",
-      nBands = 4, bandBits = 8, maxDist = maxDist)
-  }
+    graft.functions.HammingBands.candidatePairs(
+      docs(s, dir).select(col("doc_id"), graft.functions
+        .TextKernelExpressions.simhashMd5(col("text"), 32).as("sh")),
+      "doc_id", "sh", nBands = 4, bandBits = 8, maxDist = maxDist)
 
   /** Q54 — deterministic hash-based dataset split (train/val/test), the
     * backbone of any training pipeline: assignment = content-stable hash of
@@ -618,28 +631,19 @@ object TextQueries {
     * canonical (minimum) doc_id plus the cluster size. This is the step a
     * dedup pipeline actually acts on: pairs alone over-remove (for a~b,
     * b~c the pair list names b AND c as duplicates, but the cluster
-    * {a,b,c} keeps exactly one canonical survivor).
+    * {a,b,c} keeps exactly one canonical survivor). Oracle: DuckDB
+    * recursive-CTE transitive closure over the same pair set.
     *
-    * Distributed min-label propagation WITH pointer jumping: each round
-    * takes label(v) ← min over v's neighborhood, then halves paths with
-    * label(v) ← label(label(v)) — O(log diameter) rounds (chain-shaped
-    * dup families make plain propagation O(diameter): the sf0.1 fixture
-    * needs 10 plain rounds but 4 jumped ones). Each round is two
-    * shuffle-joins + a groupBy, and its result is EAGERLY
-    * localCheckpoint-ed: the next plan references the previous labels
-    * more than once, so without lineage truncation the logical plan
-    * doubles per round (persist alone does not truncate it). No
-    * driver-side graph: at 100 TB the edge list and labels stay
-    * distributed; only the per-round convergence COUNT comes back.
-    * Oracle: DuckDB recursive-CTE transitive closure over the same pair
-    * set.
-    *
-    * Small-graph fast path: the mined pair graph is orders of magnitude
-    * smaller than the corpus (that is what LSH banding is FOR), so when
-    * it fits one task a single-partition union-find replaces log-many
-    * distributed rounds — each round is several job launches, which at
-    * fixture scale costs more than the entire graph. The distributed
-    * loop stays the >limit path; both produce identical labels
+    * The pairs are the banded join's candidates
+    * ([[simhashCandidates]]): union-find needs neither a pinned simhash
+    * table nor q48's `distinct()`. [[componentLabels]] labels them and
+    * sizes each cluster; [[clusterOutput]] joins that to the corpus
+    * without a window. On the union-find path (a graph that fits one
+    * task) the jobs that remain are the band exchange, the one count
+    * that checkpoints the pairs and decides the path, the single-task
+    * union-find with its broadcast, and the final sort's range exchange
+    * (sample, map, result). The distributed label loop stays the
+    * large-graph path; both produce identical labels and sizes
     * (spec-asserted). */
   def q62DupClusters(s: SparkSession, dir: String): DataFrame =
     dupClusters(s, dir, smallGraphLimit = 5000000L)
@@ -647,7 +651,7 @@ object TextQueries {
   private[graft] def dupClusters(s: SparkSession, dir: String,
       smallGraphLimit: Long): DataFrame =
     clusterOutput(s, dir,
-      componentLabels(s, simhashPairsRaw(s, dir).select(col("a"), col("b")),
+      componentLabels(s, simhashCandidates(s, dir).select(col("a"), col("b")),
         smallGraphLimit))
 
   /** Q151 — dedup RETENTION policy: inside every near-dup cluster
@@ -687,20 +691,29 @@ object TextQueries {
 
   /** Connected-component labels over an undirected pair graph: one row
     * per node that appears in a pair, `label` = minimum id reachable from
-    * it (the component canonical). Generic over any (a, b) pair source —
-    * simhash pairs for q62, embedding-LSH pairs for q67. */
+    * it (the component canonical), `size` = the component's node count.
+    * Generic over any (a, b) pair source — simhash pairs for q62,
+    * embedding-LSH pairs for q67; a pair may repeat.
+    *
+    * The pairs are LAZILY localCheckpoint-ed, and one RDD count (one job,
+    * no aggregate exchange) both materialises them and decides the path:
+    *  - at most `smallGraphLimit` directed edges (2 per pair): the graph
+    *    is orders of magnitude smaller than the corpus (that is what LSH
+    *    banding is FOR), so one task union-finds it and emits
+    *    (id, label, size). Its output is no larger than the graph that
+    *    task already holds, so it is marked for broadcast: a join to the
+    *    corpus reads it map-side, with no corpus exchange.
+    *  - above it, the distributed min-label/pointer-jump loop
+    *    ([[propagateLabels]]) labels the nodes, and the sizes are a
+    *    two-phase `groupBy(label).count` joined back, so a mega-cluster
+    *    never lands in one task. No driver-side graph: only the
+    *    per-round convergence COUNT comes back. */
   private[graft] def componentLabels(s: SparkSession, pairs: DataFrame,
       smallGraphLimit: Long = 5000000L): DataFrame = {
     import s.implicits._
-    val ab = pairs.toDF("a", "b")
-    // LAZY checkpoint + count in one action (r22, guide §1.5): the
-    // eager form ran one job to materialize the edge blocks and a
-    // second to count them; count() on the lazy checkpoint does both
-    // in a single job. Every dup-clusters key pays this path.
-    val edges = ab.union(ab.select(col("b"), col("a")))
-      .toDF("id", "nb").localCheckpoint(eager = false)
-    if (edges.count() <= smallGraphLimit) {
-      val labels = edges.repartition(1).as[(Long, Long)]
+    val ab = pairs.toDF("a", "b").localCheckpoint(eager = false)
+    if (2 * ab.rdd.count() <= smallGraphLimit) {
+      val labels = ab.repartition(1).as[(Long, Long)]
         .mapPartitions { it =>
           val parent = scala.collection.mutable.HashMap.empty[Long, Long]
           def find(x0: Long): Long = {
@@ -720,18 +733,36 @@ object TextQueries {
           }
           val nodes = parent.keys.toArray
           val minOf = scala.collection.mutable.HashMap.empty[Long, Long]
+          val sizeOf = scala.collection.mutable.HashMap.empty[Long, Long]
           nodes.foreach { v =>
             val r = find(v)
             if (v < minOf.getOrElse(r, Long.MaxValue)) minOf(r) = v
+            sizeOf(r) = sizeOf.getOrElse(r, 0L) + 1
           }
-          nodes.iterator.map(v => (v, minOf(find(v))))
-        }.toDF("id", "label")
+          nodes.iterator.map { v =>
+            val r = find(v); (v, minOf(r), sizeOf(r))
+          }
+        }.toDF("id", "label", "size")
       q62LastRounds = 0
-      labels
-    } else propagateLabels(edges)
+      broadcast(labels)
+    } else {
+      val labels = propagateLabels(
+        ab.union(ab.select(col("b"), col("a"))).toDF("id", "nb"))
+      labels.join(labels.groupBy("label").agg(count(lit(1)).as("size")),
+        Seq("label"), "left")
+        .select(col("id"), col("label"), col("size"))
+    }
   }
 
-  /** The distributed min-label/pointer-jump loop (the >1-task path). */
+  /** The distributed min-label/pointer-jump loop (the >1-task path):
+    * each round takes label(v) ← min over v's neighborhood, then halves
+    * paths with label(v) ← label(label(v)) — O(log diameter) rounds
+    * (chain-shaped dup families make plain propagation O(diameter): the
+    * sf0.1 fixture needs 10 plain rounds but 4 jumped ones). Each round
+    * is two shuffle-joins + a groupBy, localCheckpoint-ed: the next plan
+    * references the previous labels more than once, so without lineage
+    * truncation the logical plan doubles per round (persist alone does
+    * not truncate it). */
   private def propagateLabels(edges: DataFrame): DataFrame = {
     var labels = edges.select(col("id")).distinct()
       .withColumn("label", col("id")).localCheckpoint()
@@ -772,20 +803,17 @@ object TextQueries {
     labels
   }
 
-  /** Join cluster labels back to the full corpus: singletons are their
-    * own canonical; cluster_size counts members per canonical. */
+  /** Join [[componentLabels]]' (id, label, size) back to the full
+    * corpus: singletons are their own canonical, in a cluster of 1. */
   private def clusterOutput(s: SparkSession, dir: String,
-      labels: DataFrame): DataFrame = {
-    val out = docs(s, dir).select(col("doc_id"))
-      .join(labels.select(col("id").as("doc_id"),
-        col("label").as("_canon")), Seq("doc_id"), "left")
+      labels: DataFrame): DataFrame =
+    docs(s, dir).select(col("doc_id"))
+      .join(labels.select(col("id").as("doc_id"), col("label").as("_canon"),
+        col("size").as("_size")), Seq("doc_id"), "left")
       .select(col("doc_id"),
-        coalesce(col("_canon"), col("doc_id")).as("canonical"))
-    out.withColumn("cluster_size",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("canonical"))))
+        coalesce(col("_canon"), col("doc_id")).as("canonical"),
+        coalesce(col("_size"), lit(1L)).as("cluster_size"))
       .orderBy("doc_id")
-  }
 
   /** Q63 — corpus mixing to a per-language token budget: the data-mixing
     * step of a training pipeline (rebalance languages/domains before
@@ -1282,30 +1310,49 @@ object TextQueries {
     * float constant is written as the same decimal literal both here and
     * in the oracle SQL, so both engines parse the identical double.
     *
-    * Scale posture: the corpus is scanned once, projected to
-    * (doc_id, dl, token) and FILTERED to the query terms before any
-    * shuffle — the aggregate and join see query-term postings only (the
+    * Scale posture: [[scanPostings]] tokenizes the corpus once, keeping
+    * per document only its length and its query-term tokens; N and
+    * avgdl and the query-term postings all read that one frame, so the
+    * aggregate and join see query-term postings only (the
     * inverted-index access pattern, without materializing an index).
-    * The per-term df table is query-term-sized and broadcast; avgdl and
-    * N are driver scalars from a narrow second scan (two column-pruned
-    * reads beat shuffling doc lengths for all docs). Top-k is a sort of
-    * the per-doc aggregate, which TakeOrderedAndProject bounds. */
+    * The per-term df table is query-term-sized and broadcast. Top-k is
+    * a sort of the per-doc aggregate, which TakeOrderedAndProject
+    * bounds. */
   def q77Bm25Topk(s: SparkSession, dir: String, k: Int = 20,
       qTerms: Seq[String] = Seq("join", "hash", "window")): DataFrame = {
-    val d = docs(s, dir)
-    // two driver scalars over one narrow pass (no token row explosion)
-    val stats = d
-      .agg(count(lit(1)).cast("double").as("n"),
-        avg(size(tokens(col("text")))).as("avgdl"))
-      .head
-    val nDocs = stats.getDouble(0)
-    val avgdl = stats.getDouble(1)
-    val tf = d
-      .select(col("doc_id"), size(tokens(col("text"))).cast("double").as("dl"),
-        explode(tokens(col("text"))).as("w"))
-      .filter(col("w").isin(qTerms: _*))
-      .groupBy("doc_id", "dl", "w").agg(count(lit(1)).cast("double").as("tf"))
+    val (tf, nDocs, avgdl) = scanPostings(s, dir, qTerms)
     bm25Rank(tf, nDocs, avgdl, k)
+  }
+
+  /** The scan twin of an index probe, shared by q77 and q88:
+    * (postings (doc_id, dl double, w, tf double), N, avgdl) for the
+    * query terms. The corpus is tokenized ONCE, into a lazily
+    * localCheckpoint-ed (doc_id, dl, query-term tokens) frame — a few
+    * bytes per document. The N/avgdl driver scalars read it first, in
+    * one job that also materialises it. doc_id is the corpus key, so a
+    * term's tf is a count within its document's row: the postings are a
+    * map-side explode of the kept tokens, with no aggregate and no
+    * exchange, and neither bm25Rank's `df` aggregate nor its join
+    * re-reads or re-tokenizes `documents`. */
+  private def scanPostings(s: SparkSession, dir: String,
+      qTerms: Seq[String]): (DataFrame, Double, Double) = {
+    val toks = tokens(col("text"))
+    val kept = docs(s, dir)
+      .select(col("doc_id"), size(toks).cast("double").as("dl"),
+        filter(toks, _.isin(qTerms.distinct: _*)).as("qt"))
+      .localCheckpoint(eager = false)
+    // N and the summed lengths in one job (no aggregate exchange); the
+    // sum is exact in any order, every dl being a whole number, so
+    // avgdl equals SQL's avg(dl)
+    val (n, total) = kept.select(col("dl")).rdd.map(_.getDouble(0))
+      .aggregate((0L, 0.0))((acc, dl) => (acc._1 + 1, acc._2 + dl),
+        (x, y) => (x._1 + y._1, x._2 + y._2))
+    val tf = kept
+      .select(col("doc_id"), col("dl"), col("qt"),
+        explode(array_distinct(col("qt"))).as("w"))
+      .select(col("doc_id"), col("dl"), col("w"),
+        size(filter(col("qt"), _ === col("w"))).cast("double").as("tf"))
+    (tf, n.toDouble, total / n)
   }
 
   /** THE BM25 scorer/ranker — q77's scan path and
@@ -1536,23 +1583,13 @@ object TextQueries {
     * where q77/q82 score any-term bag matches. Ranks through
     * [[bm25AndRank]], the definition the index probe
     * (`InvertedIndex.searchConjunctive`) also uses — spec-pinned
-    * row-identical. Scale posture is q77's: the corpus scan projects
-    * and filters to query-term postings before any shuffle; the AND
+    * row-identical. Scale posture is q77's: [[scanPostings]], one
+    * tokenization, query-term postings before any shuffle; the AND
     * membership check is one window over that slice. */
   def q88Bm25And(s: SparkSession, dir: String, k: Int = 20,
       qTerms: Seq[String] = Seq("join", "hash", "window")): DataFrame = {
-    val d = docs(s, dir)
-    val stats = d
-      .agg(count(lit(1)).cast("double").as("n"),
-        avg(size(tokens(col("text")))).as("avgdl"))
-      .head
-    val tf = d
-      .select(col("doc_id"), size(tokens(col("text"))).cast("double").as("dl"),
-        explode(tokens(col("text"))).as("w"))
-      .filter(col("w").isin(qTerms.distinct: _*))
-      .groupBy("doc_id", "dl", "w").agg(count(lit(1)).cast("double").as("tf"))
-    bm25AndRank(tf, qTerms.distinct.size, stats.getDouble(0),
-      stats.getDouble(1), k)
+    val (tf, nDocs, avgdl) = scanPostings(s, dir, qTerms)
+    bm25AndRank(tf, qTerms.distinct.size, nDocs, avgdl, k)
   }
 
   /** Q89 — phrase BM25 over the PERSISTED positional index: the exact

@@ -759,4 +759,20 @@ class SubscriptionsSpec extends SparkSpec {
     refused("runAggregateOn") { QueryBuilder.runAggregateOn(batch, ar) }
     refused("streamPages") { Subscriptions.streamPages(batch, sr, 1) }
   }
+
+  test("liveQuery without a table directory refuses a relationship-" +
+    "predicate where at attach, before the query starts") {
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String, Double)]
+    val stream = input.toDF().toDF("id", "typ", "v")
+    val req = Request("t", fields = Seq("id"),
+      where = Some(RelPred("c", "ck", "id", Eq("seg", "A"))))
+    val e = intercept[IllegalArgumentException] {
+      // at attach: a query that started would fail only at its first
+      // trigger, so stop it if it does
+      Subscriptions.liveQuery(stream, req, "id")((_, _) => ()).stop()
+    }
+    assert(e.getMessage.contains("liveQuery on 't': relationship " +
+      "predicates need the table directory"), e.getMessage)
+  }
 }

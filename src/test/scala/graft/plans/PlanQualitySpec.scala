@@ -485,13 +485,17 @@ class PlanQualitySpec extends SparkSpec {
     // top-k is a bounded per-partition heap, not a global sort of every
     // scored document
     assert(p.contains("TakeOrderedAndProject"), s"no bounded top-k:\n$p")
-    // the query-term IN filter runs in the scan-side projection, below
-    // the first exchange (postings are pruned before any shuffle)
+    // the query-term filter runs where the corpus is tokenized, once,
+    // before the kept (doc_id, dl, query-term tokens) frame is
+    // checkpointed: the ranking plan never re-tokenizes the text, and
+    // explodes the kept tokens into postings below the first exchange
+    // (postings are pruned before any shuffle)
+    assert(!p.contains("split("), s"ranking plan re-tokenizes:\n$p")
     val lines = p.linesIterator.toSeq
     val firstExchange = lines.indexWhere(_.contains("Exchange"))
-    val filterIdx = lines.lastIndexWhere(_.contains("Filter"))
-    assert(filterIdx > firstExchange,
-      s"query-term filter not below the exchange:\n$p")
+    val explodeIdx = lines.lastIndexWhere(_.contains("Generate explode"))
+    assert(explodeIdx > firstExchange,
+      s"postings not exploded below the exchange:\n$p")
   }
 
   test("q78 heavy hitters: sketch aggregate is two-phase (partial " +
