@@ -1013,9 +1013,10 @@ object PipelineQueries {
     val labels = TextQueries.componentLabels(s, pa)
     val withLabel = ids.join(labels, Seq("id"), "left")
       .select(col("key"), coalesce(col("label"), col("id")).as("label"))
-    // canonical + size as windows over ONE label partitioning instead
-    // of a groupBy + join-back (r22, guide §2.4: two exchanges → one;
-    // same shape clusterOutput already uses)
+    // the canonical is the min KEY, not componentLabels' min id, so it
+    // needs a label partitioning anyway: the size rides in the same
+    // window (one exchange, not a groupBy + join-back each), and
+    // componentLabels' size column is dropped above
     val w = org.apache.spark.sql.expressions.Window.partitionBy("label")
     withLabel
       .select(col("key"), min(col("key")).over(w).as("canonical"),

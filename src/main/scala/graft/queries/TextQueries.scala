@@ -358,22 +358,16 @@ object TextQueries {
       maxDist: Int = 3): DataFrame =
     simhashPairsRaw(s, dir, maxDist).orderBy("a", "b")
 
-  /** q48 without the presentation sort — the form compositions (q70,
-    * q151, q196) consume. EliminateSorts has no case for a Sort under the
-    * Union that componentLabels builds, so feeding the SORTED variant into
-    * a composition would really pay the range-exchange + global sort. The
-    * closing `distinct()` stays for q48's own output; q62's union-find
-    * reads [[simhashCandidates]]. */
-  private[graft] def simhashPairsRaw(s: SparkSession, dir: String,
-      maxDist: Int = 3): DataFrame =
-    simhashCandidates(s, dir, maxDist).distinct()
-
-  /** (a, b, d) simhash pairs without the `distinct()` exchange: doc_id
-    * is unique, so the banded join already emits each pair once
+  /** q48 without the presentation sort — the form compositions (q62,
+    * q70, q83, q85, q151, q196) consume. EliminateSorts has no case for
+    * a Sort under the Union that componentLabels builds, so feeding the
+    * SORTED variant into a composition would really pay the
+    * range-exchange + global sort. No `distinct()`: doc_id is the corpus
+    * key, so the banded join already emits each pair once
     * ([[graft.functions.HammingBands.candidatePairs]]). The simhash is
     * not pinned: both join sides read one reused exchange, so it runs
     * once per document without a cache-build job. */
-  private def simhashCandidates(s: SparkSession, dir: String,
+  private[graft] def simhashPairsRaw(s: SparkSession, dir: String,
       maxDist: Int = 3): DataFrame =
     // shared pigeonhole banding (graft.functions.HammingBands — also
     // the image dHash pairs' shape): 4 x 8-bit bands over the 32-bit
@@ -634,10 +628,9 @@ object TextQueries {
     * {a,b,c} keeps exactly one canonical survivor). Oracle: DuckDB
     * recursive-CTE transitive closure over the same pair set.
     *
-    * The pairs are the banded join's candidates
-    * ([[simhashCandidates]]): union-find needs neither a pinned simhash
-    * table nor q48's `distinct()`. [[componentLabels]] labels them and
-    * sizes each cluster; [[clusterOutput]] joins that to the corpus
+    * The pairs are q48's ([[simhashPairsRaw]]): one banded join, with
+    * no pinned simhash table and no `distinct()`. [[componentLabels]]
+    * labels them and sizes each cluster; [[clusterOutput]] joins that to the corpus
     * without a window. On the union-find path (a graph that fits one
     * task) the jobs that remain are the band exchange, the one count
     * that checkpoints the pairs and decides the path, the single-task
@@ -651,7 +644,7 @@ object TextQueries {
   private[graft] def dupClusters(s: SparkSession, dir: String,
       smallGraphLimit: Long): DataFrame =
     clusterOutput(s, dir,
-      componentLabels(s, simhashCandidates(s, dir).select(col("a"), col("b")),
+      componentLabels(s, simhashPairsRaw(s, dir).select(col("a"), col("b")),
         smallGraphLimit))
 
   /** Q151 — dedup RETENTION policy: inside every near-dup cluster
@@ -700,19 +693,24 @@ object TextQueries {
     *  - at most `smallGraphLimit` directed edges (2 per pair): the graph
     *    is orders of magnitude smaller than the corpus (that is what LSH
     *    banding is FOR), so one task union-finds it and emits
-    *    (id, label, size). Its output is no larger than the graph that
-    *    task already holds, so it is marked for broadcast: a join to the
-    *    corpus reads it map-side, with no corpus exchange.
+    *    (id, label, size), at most one row per directed edge. Up to
+    *    [[broadcastEdges]] edges that output is marked for broadcast, so
+    *    a join to the corpus reads it map-side, with no corpus exchange;
+    *    above it, AQE picks the join from the labels' runtime size.
     *  - above it, the distributed min-label/pointer-jump loop
     *    ([[propagateLabels]]) labels the nodes, and the sizes are a
     *    two-phase `groupBy(label).count` joined back, so a mega-cluster
-    *    never lands in one task. No driver-side graph: only the
-    *    per-round convergence COUNT comes back. */
+    *    never lands in one task. A caller that drops `size` pays no
+    *    aggregate: Catalyst removes a left join whose right side is
+    *    unique on the key when no right column is read. No
+    *    driver-side graph: only the per-round convergence COUNT comes
+    *    back. */
   private[graft] def componentLabels(s: SparkSession, pairs: DataFrame,
       smallGraphLimit: Long = 5000000L): DataFrame = {
     import s.implicits._
     val ab = pairs.toDF("a", "b").localCheckpoint(eager = false)
-    if (2 * ab.rdd.count() <= smallGraphLimit) {
+    val edges = 2 * ab.rdd.count()
+    if (edges <= smallGraphLimit) {
       val labels = ab.repartition(1).as[(Long, Long)]
         .mapPartitions { it =>
           val parent = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -744,7 +742,7 @@ object TextQueries {
           }
         }.toDF("id", "label", "size")
       q62LastRounds = 0
-      broadcast(labels)
+      if (edges <= broadcastEdges) broadcast(labels) else labels
     } else {
       val labels = propagateLabels(
         ab.union(ab.select(col("b"), col("a"))).toDF("id", "nb"))
@@ -753,6 +751,12 @@ object TextQueries {
         .select(col("id"), col("label"), col("size"))
     }
   }
+
+  /** The most directed edges whose union-find labels
+    * [[componentLabels]] broadcasts: 100k rows of three longs, a few MB
+    * on every executor, well under Spark's default 10 MB broadcast
+    * threshold. */
+  private[graft] val broadcastEdges = 100000L
 
   /** The distributed min-label/pointer-jump loop (the >1-task path):
     * each round takes label(v) ← min over v's neighborhood, then halves

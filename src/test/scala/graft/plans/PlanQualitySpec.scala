@@ -475,8 +475,25 @@ class PlanQualitySpec extends SparkSpec {
   test("q77 BM25: df broadcast, query-term filter below the aggregate, " +
     "top-k via TakeOrderedAndProject") {
     import graft.queries.{TextQueries => T}
-    val df = T.q77Bm25Topk(spark, dir)
-    df.collect()
+    // q77 checkpoints the (doc_id, dl, query-term tokens) frame it
+    // tokenizes the corpus into; keep that action's executed plan
+    val kept = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val checkpoints = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        if (f == "localCheckpoint") kept.add(qe.executedPlan.toString)
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(checkpoints)
+    val df = try {
+      val q = T.q77Bm25Topk(spark, dir)
+      q.collect()
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      q
+    } finally spark.listenerManager.unregister(checkpoints)
     val p = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     // the tiny per-term df table joins broadcast — the postings never
@@ -485,11 +502,18 @@ class PlanQualitySpec extends SparkSpec {
     // top-k is a bounded per-partition heap, not a global sort of every
     // scored document
     assert(p.contains("TakeOrderedAndProject"), s"no bounded top-k:\n$p")
-    // the query-term filter runs where the corpus is tokenized, once,
-    // before the kept (doc_id, dl, query-term tokens) frame is
-    // checkpointed: the ranking plan never re-tokenizes the text, and
-    // explodes the kept tokens into postings below the first exchange
-    // (postings are pruned before any shuffle)
+    // the query-term IN filter runs in the scan stage that tokenizes
+    // the corpus into the checkpointed frame, below any exchange
+    // (postings are pruned before any shuffle)...
+    assert(kept.size === 1, s"${kept.size} checkpoints")
+    val kp = kept.peek
+    assert(kp.contains("FileScan") && !kp.contains("Exchange"),
+      s"query-term tokens not kept in the scan stage:\n$kp")
+    assert(kp.linesIterator.exists(l =>
+        l.contains("filter(") && l.contains("IN (join,hash,window)")),
+      s"no query-term filter where the corpus is tokenized:\n$kp")
+    // ...so the ranking plan never re-tokenizes the text, and explodes
+    // the kept tokens into postings below its first exchange
     assert(!p.contains("split("), s"ranking plan re-tokenizes:\n$p")
     val lines = p.linesIterator.toSeq
     val firstExchange = lines.indexWhere(_.contains("Exchange"))
