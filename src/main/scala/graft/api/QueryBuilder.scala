@@ -1,6 +1,8 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FilePartition,
+  HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Composable read-request front end — the engine's analog of the
@@ -855,49 +857,164 @@ object QueryBuilder {
     }
   }
 
-  /** Compile one nested relationship bottom-up: one row per child-key
-    * value, carrying the sorted struct array. A `sub` relationship is
-    * compiled first and its array joins INTO this level's struct —
-    * q49's lineitem-before-orders aggregation order, recursively. */
-  /** Filter `df` by `w`, decorrelating any relationship predicates
-    * first (the root-where machinery applied at a relationship level —
-    * Hasura allows `orders(where: {items: {...}})`); the helper flag
-    * columns are dropped after the filter so child shapes stay
-    * unpolluted. */
-  private def filterRel(spk: SparkSession, dir: String, df: DataFrame,
-      w: BoolExp): DataFrame =
-    // ONE decorrelate-filter-drop definition with [[filterWith]]
-    filterWith(graft.Tables.load(spk, dir, _), df, w)
+  /** How one request reads the tables in `dir`. `one` says every table
+    * the request reads is a single scan split ([[oneSplit]]), so each
+    * leaf is coalesced to one partition and every join plans as a
+    * `shuffle_hash` join of two single partitions ([[Leaves.join]]).
+    * `SinglePartition` satisfies every window, aggregate, join and sort
+    * above the leaves, so such a request runs with no Exchange and no
+    * BroadcastExchange: one Spark job, where each query stage would
+    * otherwise be a job of its own. No scan loses parallelism, because
+    * each was one task already. */
+  private final class Leaves(s: SparkSession, dir: String,
+      val one: Boolean) {
+    def load(table: String): DataFrame = {
+      val d = graft.Tables.load(s, dir, table)
+      if (one) d.coalesce(1) else d
+    }
+
+    /** `l.join(r, on, how)`, single-partition when `one`. Both sides of
+      * such a join are one partition, and the planner keeps them so
+      * only while each side reports exactly `SinglePartition` (and
+      * estimates ≤ `spark.sql.maxSinglePartitionBytes`). A left join
+      * reports its left side's partitioning; an inner join reports a
+      * partitioning collection instead, so its output is coalesced
+      * back for the joins above it (one task either way). */
+    def join(l: DataFrame, r: DataFrame, on: Column,
+        how: String): DataFrame =
+      if (!one) l.join(r, on, how)
+      else {
+        val j = l.join(r.hint("shuffle_hash"), on, how)
+        if (how == "inner") j.coalesce(1) else j
+      }
+  }
+
+  /** Whether every file `df` scans fits in ONE scan split under Spark's
+    * own rule: the files pack into a single partition of at most
+    * `FilePartition.maxSplitBytes` (from `spark.sql.files.
+    * maxPartitionBytes`/`openCostInBytes` and the default
+    * parallelism), each file after the first adding its open cost.
+    * A leaf that is not a file relation (a stream's state, in-memory
+    * rows) answers false, so its request keeps the parallel plan. */
+  private def oneSplit(s: SparkSession, df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall {
+      case r: LogicalRelation => r.relation match {
+        case fs: HadoopFsRelation =>
+          val dirs = fs.location.listFiles(Nil, Nil)
+          val lens = dirs.flatMap(_.files.map(_.getLen))
+          lens.sum + s.sessionState.conf.filesOpenCostInBytes *
+            (lens.size - 1).max(0) <= FilePartition.maxSplitBytes(s, dirs)
+        case _ => false
+      }
+      case _ => false
+    }
+
+  /** Every table a request reads through the table directory: its
+    * relationships (recursively), ordering aggregates and the tables
+    * of relationship predicates in any where. */
+  private def tablesRead(req: Request): Seq[String] = {
+    def preds(w: Option[BoolExp]): Seq[String] = {
+      def walk(e: BoolExp): Seq[String] = e match {
+        case RelPred(t, _, _, p) => t +: walk(p)
+        case And(es @ _*) => es.flatMap(walk)
+        case Or(es @ _*) => es.flatMap(walk)
+        case Not(x) => walk(x)
+        case _ => Nil
+      }
+      w.toSeq.flatMap(walk)
+    }
+    def nested(n: Nested): Seq[String] =
+      n.table +: (preds(n.where) ++ n.subs.flatMap(nested))
+    preds(req.where) ++ req.nested.flatMap(nested) ++
+      req.aggRels.flatMap(a => a.table +: preds(a.where)) ++
+      req.orderAggs.flatMap(o => o.table +: preds(o.where))
+  }
+
+  /** The literal bound the root where puts on `key`, as the same
+    * predicate over another column: its top-level `_eq`/`_in`
+    * conjuncts, or a range with both a lower and an upper literal end.
+    * None for anything computed (a disjunction, a one-sided range,
+    * other columns, relationship predicates), whose key set only the
+    * parents themselves can give. */
+  private def keyBound(w: BoolExp, key: String): Option[Column => Column] = {
+    def conjuncts(e: BoolExp): Seq[BoolExp] = e match {
+      case And(es @ _*) => es.flatMap(conjuncts)
+      case x => Seq(x)
+    }
+    val bounds: Seq[(Char, Column => Column)] = conjuncts(w).collect {
+      case Eq(`key`, v) => ('=', (c: Column) => c === lit(v))
+      case In(`key`, vs) => ('=', (c: Column) => c.isin(vs: _*))
+      case Gt(`key`, v) => ('>', (c: Column) => c > lit(v))
+      case Gte(`key`, v) => ('>', (c: Column) => c >= lit(v))
+      case Lt(`key`, v) => ('<', (c: Column) => c < lit(v))
+      case Lte(`key`, v) => ('<', (c: Column) => c <= lit(v))
+    }
+    val kinds = bounds.map(_._1).toSet
+    if (kinds('=') || (kinds('>') && kinds('<')))
+      Some(c => bounds.map(_._2(c)).reduce(_ && _))
+    else None
+  }
+
+  /** What narrows a relationship arm to the parents the root's where
+    * keeps: `Left` is the root where's literal bound on the parent key
+    * ([[keyBound]]), applied to the child key; `Right` is the
+    * surviving parents' key projection (column `__parent_keys`). */
+  private type Restriction = Either[Column => Column, DataFrame]
 
   /** Restrict a child arm to rows whose key can reach a surviving
     * parent — sideways information passing (guide §3.2). Without it a
     * relationship arm aggregates/windows over the WHOLE child table and
     * only the attach join discards the unreachable groups, however
     * selective the parent's where is (q201: two lineitem-wide arms for
-    * 40 customers). A left-semi join against the parent's filtered,
-    * pre-slice key projection is result-identical — child groups
+    * 40 customers). Either form is result-identical — child groups
     * without a parent key never appear in the response (inner attach
     * drops them; left attach preserves PARENTS, not children) — but
     * prunes the child scan to the selected keys before the expensive
     * per-key work. Only applied when the parent is actually restricted
     * (gated by the caller): an unrestricted parent's key set is the
-    * whole table and the semi-join would be pure overhead. AQE
-    * broadcasts the key set when it is small; when it is not, the
-    * semi-join degrades to the shuffle the aggregate pays anyway. */
-  private def restrictToParent(child: DataFrame, childKey: Column,
-      parentKeys: Option[DataFrame]): DataFrame =
+    * whole table and the restriction would be pure overhead.
+    *
+    * A literal bound (`Left`) is a filter on the child key that reaches
+    * the child's parquet scan and costs no join and no job. It is
+    * written out, so the arm does not hang on Catalyst inferring the
+    * parent's literal through the attach join, the fold, the window
+    * and the leaf's coalesce. A computed restriction (`Right`) is a
+    * left-semi join against the parents' key projection: AQE broadcasts
+    * the key set when it is small; when it is not, the semi-join
+    * degrades to the shuffle the aggregate pays anyway. In a
+    * one-partition request it is an inner `shuffle_hash` join against
+    * the DISTINCT keys instead (the same rows): Catalyst pushes a
+    * semi-join below the leaf's coalesce, onto the bare scan, where it
+    * would need an exchange. */
+  private def restrictToParent(lv: Leaves, child: DataFrame,
+      childKey: Column, parentKeys: Option[Restriction]): DataFrame =
     parentKeys match {
-      case Some(pk) =>
+      case Some(Left(bound)) => child.filter(bound(childKey))
+      case Some(Right(pk)) if lv.one =>
+        lv.join(child, pk.distinct(), childKey === pk("__parent_keys"),
+          "inner").drop("__parent_keys")
+      case Some(Right(pk)) =>
         child.join(pk, childKey === pk("__parent_keys"), "left_semi")
       case None => child
     }
 
-  private def compileNested(s: SparkSession, dir: String,
-      n: Nested, parentKeys: Option[DataFrame] = None): DataFrame = {
-    val loaded = graft.Tables.load(s, dir, n.table)
+  /** Compile one nested relationship bottom-up: one row per child-key
+    * value, carrying the sorted struct array. A `sub` relationship is
+    * compiled first and its array joins INTO this level's struct —
+    * q49's lineitem-before-orders aggregation order, recursively. The
+    * level reads its table through `lv` (one partition when the whole
+    * request fits one: no exchange under the window, the fold or the
+    * sub-arm joins) and narrows it with `parentKeys`
+    * ([[restrictToParent]]); its own sub-arms are always narrowed by
+    * a key projection of this level's rows. */
+  private def compileNested(lv: Leaves, n: Nested,
+      parentKeys: Option[Restriction] = None): DataFrame = {
+    val loaded = lv.load(n.table)
     // the child's own where: applied at the leaf so it reaches the scan
-    val own = n.where.map(filterRel(s, dir, loaded, _)).getOrElse(loaded)
-    val child0 = restrictToParent(own, own(n.childKey), parentKeys)
+    // (relationship predicates in it decorrelate first, flag columns
+    // dropped after — the root-where machinery at a relationship level)
+    val own = n.where.map(filterWith(lv.load, loaded, _)).getOrElse(loaded)
+    val child0 = restrictToParent(lv, own, own(n.childKey), parentKeys)
     val keyAlias = s"__key_${n.as}"
     // each sub-relationship pre-aggregates to one row per key and
     // joins back — SIBLINGS under one level compose exactly like the
@@ -913,12 +1030,12 @@ object QueryBuilder {
     // each sub the same way
     val restricted = parentKeys.nonEmpty || n.where.nonEmpty
     val joined = n.subs.foldLeft(child0) { (acc, m) =>
-      val subAgg = compileNested(s, dir, m,
+      val subAgg = compileNested(lv, m,
         if (restricted)
-          Some(child0.select(child0(m.parentKey).as("__parent_keys")))
+          Some(Right(child0.select(child0(m.parentKey).as("__parent_keys"))))
         else None)
       subCols += m.as -> subAgg(m.as)
-      acc.join(subAgg,
+      lv.join(acc, subAgg,
         child0(m.parentKey) === subAgg(s"__key_${m.as}"), m.joinType)
     }
     val child = childSlice(joined, child0(n.childKey), n.orderBy,
@@ -1032,7 +1149,11 @@ object QueryBuilder {
     * stream's state, not in a directory): where → distinct_on →
     * fields → order/offset/limit, relationship-free. [[run]] delegates
     * its relationship-free case here, so batch and subscription serve
-    * one compiled shape. */
+    * one compiled shape. It keeps the frame's own partitioning, never
+    * the one-partition plan of [[runOn]]: a relationship-free request
+    * over a one-split table is one scan stage already, and an order_by
+    * with a limit plans as a TakeOrderedAndProject, not a range
+    * exchange. */
   def runRoot(base0: DataFrame, req: Request): DataFrame = {
     require(req.nested.isEmpty && req.aggRels.isEmpty,
       s"runRoot on '${req.table}': relationship selections need the " +
@@ -1163,15 +1284,27 @@ object QueryBuilder {
     * stream's state), while CHILD tables (relationship joins,
     * relationship predicates, ordering aggregates) still load from
     * the table directory. [[run]] delegates here, so batch and
-    * subscription serve one compiled shape. */
+    * subscription serve one compiled shape.
+    *
+    * A relationship-bearing request whose root frame and every table
+    * it reads are each a single scan split ([[oneSplit]]) plans in ONE
+    * partition ([[Leaves]]): leaves coalesced to one partition,
+    * `shuffle_hash` joins, and the root order_by a sort of that one
+    * partition, so it runs as one Spark job with no Exchange. Larger
+    * inputs, and roots that are not files, keep the parallel plan. */
   def runOn(s: SparkSession, dir: String, load0: DataFrame,
       req0: Request): DataFrame = {
+    val lv = new Leaves(s, dir,
+      (req0.nested.nonEmpty || req0.aggRels.nonEmpty) &&
+        oneSplit(s, load0) && tablesRead(req0).distinct.forall(t =>
+          oneSplit(s, graft.Tables.load(s, dir, t))))
+    val root = if (lv.one) load0.coalesce(1) else load0
     val (baseDec, reqDec) = req0.where match {
       case Some(w) if hasRelPred(w) =>
-        val (df, w2) = decorrelate(s, dir, load0, w,
+        val (df, w2) = decorrelateWith(lv.load, root, w,
           new java.util.concurrent.atomic.AtomicInteger())
         (df, req0.copy(where = Some(w2)))
-      case _ => (load0, req0)
+      case _ => (root, req0)
     }
     // ordering aggregates: join each per-parent-key child aggregate as
     // a hidden post-repaired column; the final select drops it (Spark
@@ -1202,18 +1335,19 @@ object QueryBuilder {
         // share a single child scan + groupBy + join (the AggRel
         // multi-aggregate shape)
         case (df, (((table, childKey, parentKey, where), oas), i)) =>
-          val loaded0 = graft.Tables.load(s, dir, table)
+          val loaded0 = lv.load(table)
           // the child filter (a role's row grant) applies BEFORE the
           // aggregate — the ordering value sums only visible rows;
           // relationship predicates inside it decorrelate like any
           // relationship where
           val loaded =
-            where.map(filterRel(s, dir, loaded0, _)).getOrElse(loaded0)
+            where.map(filterWith(lv.load, loaded0, _)).getOrElse(loaded0)
           val keyAlias = s"__oakey_$i"
           val aggCols = oas.map(_.agg.agg(loaded))
           val rel = loaded.groupBy(loaded(childKey).as(keyAlias))
             .agg(aggCols.head, aggCols.tail: _*)
-          val joined = df.join(rel, df(parentKey) === rel(keyAlias), "left")
+          val joined =
+            lv.join(df, rel, df(parentKey) === rel(keyAlias), "left")
           oas.foldLeft(joined)((d, oa) =>
             d.withColumn(oa.as, oa.agg.post(col(oa.agg.as))))
             .drop(keyAlias +: oas.map(_.agg.as): _*)
@@ -1233,17 +1367,25 @@ object QueryBuilder {
     // sideways parent-key pushdown (guide §3.2): when the root carries
     // a where, every child arm prunes to the surviving parents' keys
     // instead of aggregating its whole table (see restrictToParent).
-    // Keys re-derive from base0 + the root where (pre-slice superset of
+    // A literal bound on the parent key (`_eq`/`_in`/a closed range)
+    // applies to the child key as it stands, when both keys have one
+    // type (the same comparison then holds on both sides). Otherwise
+    // keys re-derive from base0 + the root where (pre-slice superset of
     // the attached parents) — a narrow filtered key scan, far cheaper
     // than the corpus-wide child work it prevents
-    def rootKeys(parentKey: String): Option[DataFrame] =
-      req.where.map(w => base0.filter(w.toColumn)
-        .select(col(parentKey).as("__parent_keys")))
+    def rootKeys(parentKey: String, table: String,
+        childKey: String): Option[Restriction] =
+      req.where.map(w => keyBound(w, parentKey)
+        .filter(_ => base0.schema(parentKey).dataType ==
+          graft.Tables.load(s, dir, table).schema(childKey).dataType)
+        .toLeft(base0.filter(w.toColumn)
+          .select(col(parentKey).as("__parent_keys"))))
     // every relationship pre-aggregates to one row per parent key and
     // joins back on it — never a flat multi-child join
     val withNested = req.nested.zipWithIndex.foldLeft(sortKeyed) {
       case (acc, (n, i)) =>
-        val rel = compileNested(s, dir, n, rootKeys(n.parentKey))
+        val rel = compileNested(lv, n,
+          rootKeys(n.parentKey, n.table, n.childKey))
         // the TOP level renders to_json (cross-engine-stable wire
         // shape); inner levels stay structured inside their parent;
         // a left attach renders childless parents as "[]", not null —
@@ -1254,7 +1396,7 @@ object QueryBuilder {
         // namespace than table columns, so an alias that EQUALS a
         // base column name must neither be ambiguous here nor replace
         // the base column other selections may still reference
-        acc.join(rel, base0(n.parentKey) === rel(s"__key_${n.as}"),
+        lv.join(acc, rel, base0(n.parentKey) === rel(s"__key_${n.as}"),
             n.joinType)
           .withColumn(s"__rel_$i",
             if (n.single) to_json(element_at(rel(n.as), 1), jsonOpts)
@@ -1269,13 +1411,13 @@ object QueryBuilder {
     // defect a single flat multi-child join + groupBy would have)
     val withAggs = req.aggRels.zipWithIndex.foldLeft(withNested) {
       case (acc, (a, i)) =>
-        val loaded = graft.Tables.load(s, dir, a.table)
+        val loaded = lv.load(a.table)
         val filtered0 =
-          a.where.map(filterRel(s, dir, loaded, _)).getOrElse(loaded)
+          a.where.map(filterWith(lv.load, loaded, _)).getOrElse(loaded)
         // aggregate relationships prune to the parents' keys the same
         // way as array relationships (restrictToParent)
-        val filtered = restrictToParent(filtered0,
-          filtered0(a.childKey), rootKeys(a.parentKey))
+        val filtered = restrictToParent(lv, filtered0, filtered0(a.childKey),
+          rootKeys(a.parentKey, a.table, a.childKey))
         val child = childSlice(filtered, loaded(a.childKey), a.orderBy,
           loaded(_), a.distinctOn, a.offset, a.limit)
         val keyAlias = s"__aggkey_$i"
@@ -1302,7 +1444,7 @@ object QueryBuilder {
              .as(s"__nodes_$i")))
         val rel = child.groupBy(loaded(a.childKey).as(keyAlias))
           .agg(aggCols.head, aggCols.tail: _*)
-        acc.join(rel, base0(a.parentKey) === rel(keyAlias), a.joinType)
+        lv.join(acc, rel, base0(a.parentKey) === rel(keyAlias), a.joinType)
     }
     // the OUTPUT name "nodes" is single-occupancy: Hasura's response
     // nests per relationship, but this engine's is flat — a second
